@@ -229,3 +229,18 @@ def test_ocds_hoisted_flatten_matches_inline_probes(spark):
     )
     # silence unused-import lint for the documented handles
     assert all(x is not None for x in (ADDRS, AN, AW, BP, ITEM1, SUP, TN))
+
+
+def test_ocds_unused_hoist_fails_at_construction(spark, monkeypatch):
+    """A hoisted probe whose source text no longer appears in any flatten
+    expression must fail when the query is built, not silently un-hoist."""
+    import pytest
+
+    import uk_procurement_data_pipeline_spark.queries.ref_pipeline as rp
+    from uk_procurement_data_pipeline_spark.queries import registry
+
+    no_award = [(a, p) for a, p in rp._FLAT if rp.AN.s not in p.s]
+    assert len(no_award) < len(rp._FLAT)
+    monkeypatch.setattr(rp, "_FLAT", no_award)
+    with pytest.raises(ValueError, match="_an"):
+        registry()["ocds_flatten_wide"].fn(spark, SF_DIR)

@@ -476,3 +476,172 @@ def test_replay_scramble_order_is_md5_permutation(spark, sf_dir):
     r2 = EventsReplayStreamReader({"path": path})
     got2, _ = r2.read({"pos": 0})
     assert [row[0] for row in list(got2)[:50]] == keys[:50]
+
+
+# --- shared drain plumbing: session.scoped_conf and queries.events._drain --
+
+_ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+
+
+def test_scoped_conf_restores_set_and_unset_keys_on_raise(spark):
+    from uk_procurement_data_pipeline_spark.session import scoped_conf
+
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    assert spark.conf.get(_PROVIDER, None) is None
+    with pytest.raises(RuntimeError, match="body failed"):
+        with scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": "3", _PROVIDER: _ROCKSDB}
+        ):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+            assert spark.conf.get(_PROVIDER) == _ROCKSDB
+            raise RuntimeError("body failed")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    # absent before -> unset again, not pinned to the default class
+    assert spark.conf.get(_PROVIDER, None) is None
+
+
+@pytest.mark.parametrize(
+    "end_offset, want",
+    [
+        ({"pos": 7}, 7),
+        ({"cursor": 2000}, 2000),
+        ("{'pos': 12}", 12),
+        ("{'cursor': 1000}", 1000),
+        ({"other": 3}, -1),
+        ("no digits here", -1),
+        (None, -1),
+        (42, -1),
+    ],
+)
+def test_offset_pos_shapes(end_offset, want):
+    from uk_procurement_data_pipeline_spark.queries.events import _offset_pos
+
+    assert _offset_pos(end_offset) == want
+
+
+def test_drain_start_failure_leaves_session_unchanged(spark):
+    """start() fails because a query named qname is already active: the
+    shuffle width and state-store provider are restored, no new query is
+    left running and the checkpoint dir is removed."""
+    import glob
+    import tempfile
+
+    from uk_procurement_data_pipeline_spark.queries.events import _drain
+
+    qname = "drain_start_failure_probe"
+
+    def ckpt_dirs():
+        roots = ("/dev/shm", tempfile.gettempdir())
+        return {p for r in roots for p in glob.glob(f"{r}/{qname}_ckpt_*")}
+
+    blocker = (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        .writeStream.format("memory")
+        .queryName(qname)
+        .trigger(processingTime="10 seconds")
+        .start()
+    )
+    try:
+        width = spark.conf.get("spark.sql.shuffle.partitions")
+        provider = spark.conf.get(_PROVIDER, None)
+        active = {q.id for q in spark.streams.active}
+        dirs = ckpt_dirs()
+        src = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        with pytest.raises(Exception, match=qname):
+            _drain(src, qname, "append", rows=10, confs={_PROVIDER: _ROCKSDB})
+        assert spark.conf.get("spark.sql.shuffle.partitions") == width
+        assert spark.conf.get(_PROVIDER, None) == provider
+        assert {q.id for q in spark.streams.active} == active
+        assert ckpt_dirs() == dirs
+    finally:
+        blocker.stop()
+
+
+def test_file_streams_match_on_nanos_fixture(spark, sf_dir, tmp_path):
+    """The four availableNow file streams read a TIMESTAMP(NANOS) copy of
+    events (the nanosAsLong branch no shipped fixture exercises) to the
+    same rows as the µs fixture, and leave nanosAsLong as they found it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from uk_procurement_data_pipeline_spark.catalog import probe_events_nanos
+    from uk_procurement_data_pipeline_spark.queries import registry
+
+    nanos_dir = tmp_path / "nanos"
+    nanos_dir.mkdir()
+    # cast, then write: this pyarrow's coerce_timestamps has no "ns" option,
+    # and format 2.6 stores a ns column as TIMESTAMP(NANOS) as-is
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    ts_ns = ev["ts"].cast(pa.timestamp("ns"))
+    pq.write_table(
+        ev.set_column(ev.schema.get_field_index("ts"), "ts", ts_ns),
+        nanos_dir / "events.parquet",
+        version="2.6",
+    )
+    assert probe_events_nanos(spark, str(nanos_dir / "events.parquet"))
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key, None)
+    reg = registry()
+    for name in (
+        "stream_tumbling_counts",
+        "stream_dedup_pairs",
+        "stream_stateful_user_totals",
+        "stream_static_enrich",
+    ):
+        want = sorted(reg[name].fn(spark, sf_dir).collect())
+        got = sorted(reg[name].fn(spark, str(nanos_dir)).collect())
+        assert got == want, name
+        assert spark.conf.get(key, None) == before, name
+
+
+def _owners(path, match) -> set[str]:
+    """``module.function`` for each top-level function of ``path`` whose
+    body holds an AST node matching ``match`` (``module.None`` at module
+    level)."""
+    import ast
+
+    out: set[str] = set()
+
+    def visit(node, owner):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, owner or child.name)
+                continue
+            if match(child):
+                out.add(f"{path.stem}.{owner}")
+            visit(child, owner)
+
+    visit(ast.parse(path.read_text()), None)
+    return out
+
+
+def test_conf_and_drain_idioms_stay_in_their_helpers():
+    """Conf save/restore lives in session.scoped_conf (catalog.load_events
+    is the one documented exception), and the checkpoint dir and progress
+    poll of a stream drain live in queries.events._drain."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "uk_procurement_data_pipeline_spark"
+
+    def conf_write(n):
+        return (
+            isinstance(n, ast.Attribute)
+            and n.attr in ("set", "unset")
+            and isinstance(n.value, ast.Attribute)
+            and n.value.attr == "conf"
+        )
+
+    def drain_plumbing(n):
+        if isinstance(n, ast.Attribute):
+            return n.attr in ("lastProgress", "mkdtemp")
+        return isinstance(n, ast.Name) and n.id == "mkdtemp"
+
+    conf_sites = set().union(*(_owners(p, conf_write) for p in pkg.rglob("*.py")))
+    assert conf_sites == {"session.scoped_conf", "catalog.load_events"}
+    drain_sites = set().union(
+        *(_owners(p, drain_plumbing) for p in (pkg / "queries").glob("*.py"))
+    )
+    assert drain_sites == {"events._drain"}

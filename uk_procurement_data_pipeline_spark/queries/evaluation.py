@@ -2063,9 +2063,9 @@ def variant_props_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def python_datasource_stream_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time
     import zlib
 
+    from uk_procurement_data_pipeline_spark.queries.events import _drain
     from uk_procurement_data_pipeline_spark.sources.python_datasource import (
         register_notice_feed,
     )
@@ -2083,63 +2083,9 @@ def python_datasource_stream_feed(spark: SparkSession, sf_dir: str) -> DataFrame
         F.count(F.lit(1)).cast("bigint").alias("n_notices"),
         F.sum("amount_cents").cast("bigint").alias("total_cents"),
     )
-    # 8 state partitions (not the session's 32 — two 1000-row pages would
-    # pay ~all task-launch overhead) and a tmpfs checkpoint, as in the
-    # other streaming specs (r10).
-    import os
-    import shutil
-    import tempfile
-
-    ckpt_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
-    ckpt = tempfile.mkdtemp(prefix=f"pyds_ckpt_{qname}_", dir=ckpt_root)
-    # ADVICE r10: the inline set/restore here was not exception-safe — if
-    # .start() raised, the session kept shuffle.partitions=8. Reuse the
-    # events.py context manager, which restores in a finally.
-    from uk_procurement_data_pipeline_spark.queries.events import _stream_shuffle
-
-    with _stream_shuffle(spark, "8"):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-    try:
-        # Drain poll on lastProgress offsets (r10; was a collect() of the
-        # memory table every 0.25 s — each poll a full Spark job). A
-        # progress row is published only AFTER its batch commits, so
-        # endOffset cursor >= n means the final page is already in the
-        # complete-mode table.
-        import re
-
-        deadline = time.time() + 240
-        while time.time() < deadline:
-            lp = q.lastProgress
-            eo = lp["sources"][0].get("endOffset") if lp else None
-            if eo is not None:
-                # ADVICE r10: guard the cursor extraction — an unexpected
-                # offset shape must fall through to the next poll (and
-                # ultimately the TimeoutError), not raise KeyError mid-poll.
-                cur = None
-                if isinstance(eo, dict):
-                    cur = eo.get("cursor")
-                else:
-                    m = re.search(r"-?\d+", str(eo))
-                    if m:
-                        cur = m.group()
-                if cur is not None and int(cur) >= n:
-                    break
-            time.sleep(0.1)
-        else:
-            raise TimeoutError(
-                f"notice_feed stream did not drain {n} rows in 240s"
-            )
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(qname).orderBy("region")
+    # The offsets are page cursors, so the drain waits for cursor >= n:
+    # the final page is then already in the complete-mode table.
+    return _drain(agg, qname, "complete", rows=n).orderBy("region")
 
 
 @register(

@@ -14,12 +14,20 @@ aligns to the same epoch origin as Spark's tumbling windows).
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
+import tempfile
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from uk_procurement_data_pipeline_spark.catalog import load
+from uk_procurement_data_pipeline_spark.catalog import load, probe_events_nanos
 from uk_procurement_data_pipeline_spark.functions.exact import exact_sum, oracle_sum
 from uk_procurement_data_pipeline_spark.queries.base import register
+from uk_procurement_data_pipeline_spark.session import scoped_conf
+from uk_procurement_data_pipeline_spark.streaming.events_stream import EVENTS_DDL
 
 
 def _parquet_num_rows(path: str) -> int:
@@ -46,11 +54,12 @@ def _parquet_num_rows(path: str) -> int:
 def _progress_wm_ms(lp) -> int:
     """Watermark from a StreamingQueryProgress row, as exact epoch ms.
 
-    Shared by the two deterministic-drain loops (stream_session_ttl_close,
-    stream_late_drop_windows). Derived with integer timedelta division —
-    ``datetime.timestamp() * 1000`` can truncate 1 ms from float rounding,
-    and a 1 ms-short reading on the FINAL watermark would leave the drain
-    condition unsatisfiable (240 s TimeoutError).
+    Read by the ``_drain`` poll when it waits for a final watermark
+    (stream_session_ttl_close, stream_late_drop_windows). Derived with
+    integer timedelta division — ``datetime.timestamp() * 1000`` can
+    truncate 1 ms from float rounding, and a 1 ms-short reading on the
+    FINAL watermark would leave the drain condition unsatisfiable (240 s
+    TimeoutError).
     """
     import datetime as _dt
 
@@ -62,25 +71,129 @@ def _progress_wm_ms(lp) -> int:
     return (dt - epoch) // _dt.timedelta(milliseconds=1)
 
 
-from contextlib import contextmanager  # noqa: E402
+def _offset_pos(eo) -> int:
+    """Row position or page cursor from a source's ``endOffset``, else -1.
 
-
-@contextmanager
-def _stream_shuffle(spark, n: str = "8"):
-    """Scope the state-store shuffle width around a writeStream .start().
-
-    The streaming specs run 1-12 micro-batches of a few thousand rows:
-    the session's 32 shuffle partitions are ~all task-launch overhead per
-    batch, while 8 still exercises multi-partition state sharding. Only
-    query START reads the conf (the plan is fixed then), so restoring it
-    immediately after .start() cannot affect the running stream.
+    The Python sources report ``{'pos': N}`` / ``{'cursor': N}`` either as
+    a dict or as its str() form (single quotes, not JSON). Any other shape
+    reads as -1 so the drain poll falls through to the next progress row
+    (and ultimately the TimeoutError) instead of raising mid-poll.
     """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    if isinstance(eo, dict):
+        pos = eo.get("pos", eo.get("cursor"))
+        return int(pos) if pos is not None else -1
+    if isinstance(eo, str):
+        m = re.search(r"-?\d+", eo)
+        return int(m.group()) if m else -1
+    return -1
+
+
+def _drain(
+    df: DataFrame,
+    qname: str,
+    mode: str,
+    *,
+    rows: int | None = None,
+    watermark_ms: int | None = None,
+    confs: dict[str, str] | None = None,
+) -> DataFrame:
+    """Run the streaming ``df`` into the memory table ``qname`` and return it.
+
+    The streaming specs run 1-12 micro-batches of a few thousand rows, so
+    the session's 32 shuffle partitions would be ~all task-launch overhead
+    per batch; 8 still exercises multi-partition state sharding. That width
+    and any extra ``confs`` hold for the whole run and are restored even
+    when ``start()`` fails. The checkpoint (offset/commit log and state
+    snapshots, fsynced every batch) goes to tmpfs when available: per-batch
+    latency is commit IO at these sizes. A fresh dir per run keeps a replay
+    deterministic (a stale checkpoint would resume offsets and skip data).
+
+    ``rows=None`` drains a file source with ``trigger(availableNow)``.
+    Otherwise the source is a Python stream reader, whose simple-reader
+    wrapper only snapshots the next prefetched slice under availableNow,
+    so the run uses a processingTime trigger and polls ``lastProgress``
+    until every source's end offset reaches ``rows``. A progress row is
+    published only after its batch commits. With ``watermark_ms`` the poll
+    also waits for a row whose watermark reaches it: the trailing no-data
+    batch that fires final timers or flushes final windows then commits
+    before ``stop()`` instead of racing it.
+    """
+    spark = df.sparkSession
+    ckpt_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8", **(confs or {})}):
+        ckpt = tempfile.mkdtemp(prefix=f"{qname}_ckpt_", dir=ckpt_root)
+        q = None
+        try:
+            writer = (
+                df.writeStream.format("memory")
+                .queryName(qname)
+                .outputMode(mode)
+                .option("checkpointLocation", ckpt)
+            )
+            if rows is None:
+                q = writer.trigger(availableNow=True).start()
+                q.awaitTermination()
+            else:
+                q = writer.trigger(processingTime="0 seconds").start()
+                deadline = time.time() + 240
+                drained = False
+                while time.time() < deadline:
+                    lp = q.lastProgress
+                    drained = drained or bool(
+                        lp
+                        and lp["sources"]
+                        and all(
+                            _offset_pos(s.get("endOffset")) >= rows
+                            for s in lp["sources"]
+                        )
+                    )
+                    if drained and (
+                        watermark_ms is None or _progress_wm_ms(lp) >= watermark_ms
+                    ):
+                        break
+                    time.sleep(0.1)
+                else:
+                    raise TimeoutError(
+                        f"stream {qname} did not drain {rows} rows "
+                        f"(watermark target {watermark_ms} ms) in 240s"
+                    )
+        finally:
+            if q is not None:
+                q.stop()
+            shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.table(qname)
+
+
+def _final_watermark_ms(path: str, delay_us: int) -> int:
+    """The watermark a replay of ``path`` ends on: max(ts) - delay in
+    Spark's ms arithmetic, read from the parquet file without a job."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    ts = pq.read_table(path, columns=["ts"], memory_map=True)["ts"]
+    return pc.max(ts).cast(pa.timestamp("us")).value // 1000 - delay_us // 1000
+
+
+def _events_stream(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
+    """File stream over ``sf_dir``'s events parquet, plus the confs its run
+    needs (pass them to ``_drain``).
+
+    The fixture's ts has been TIMESTAMP(MICROS) or TIMESTAMP(NANOS) across
+    driver rounds. A nanos file is read with ts declared as long, under the
+    nanosAsLong lowering held for the whole drain, and truncated ns -> µs
+    exactly as ``catalog.load_events`` does. The probe re-raises non-nanos
+    failures (missing or corrupt file).
+    """
+    nanos = probe_events_nanos(spark, f"{sf_dir}/events.parquet")
+    ddl = EVENTS_DDL.replace("ts timestamp", "ts long") if nanos else EVENTS_DDL
+    src = spark.readStream.schema(ddl).parquet(f"{sf_dir}/events*.parquet")
+    if not nanos:
+        return src, {}
+    return (
+        src.withColumn("ts", F.expr("timestamp_micros(ts div 1000)")),
+        {"spark.sql.legacy.parquet.nanosAsLong": "true"},
+    )
 
 
 @register(
@@ -174,56 +287,23 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import zlib
 
-    from uk_procurement_data_pipeline_spark.catalog import probe_events_nanos
-
     qname = f"stream_tumbling_{zlib.crc32(sf_dir.encode()) & 0xFFFFFFFF:08x}"
-    # Probe the fixture's ts physical type via the batch reader (the fixture
-    # has been TIMESTAMP(MICROS) or TIMESTAMP(NANOS) across driver rounds).
-    # A nanos fixture needs the nanosAsLong lowering for the WHOLE stream run
-    # (schema resolution AND every micro-batch scan), so in that branch the
-    # conf stays set until the stream drains. The probe re-raises non-nanos
-    # failures (missing/corrupt file) instead of misclassifying them.
-    nanos = probe_events_nanos(spark, f"{sf_dir}/events.parquet")
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        ts_ddl = "ts long" if nanos else "ts timestamp"
-        src = spark.readStream.schema(
-            f"event_id bigint, {ts_ddl}, user_id bigint, event_type string, "
-            "value double, props string"
-        ).parquet(f"{sf_dir}/events*.parquet")
-        if nanos:
-            src = src.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        win = (
-            src.groupBy(F.window("ts", "10 minutes"), "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                exact_sum("value", "sum_value"),
-            )
-            .select(
-                F.col("window.start").alias("window_start"),
-                F.col("window.end").alias("window_end"),
-                "event_type",
-                "n_events",
-                "sum_value",
-            )
+    src, confs = _events_stream(spark, sf_dir)
+    win = (
+        src.groupBy(F.window("ts", "10 minutes"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            exact_sum("value", "sum_value"),
         )
-        with _stream_shuffle(spark):
-            q = (
-                win.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .start()
-            )
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-    return spark.table(qname)
+        .select(
+            F.col("window.start").alias("window_start"),
+            F.col("window.end").alias("window_end"),
+            "event_type",
+            "n_events",
+            "sum_value",
+        )
+    )
+    return _drain(win, qname, "complete", confs=confs)
 
 
 @register(
@@ -781,37 +861,12 @@ def value_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import zlib
 
-    from uk_procurement_data_pipeline_spark.catalog import probe_events_nanos
-
     qname = f"stream_dedup_{zlib.crc32(sf_dir.encode()) & 0xFFFFFFFF:08x}"
-    nanos = probe_events_nanos(spark, f"{sf_dir}/events.parquet")
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        ts_ddl = "ts long" if nanos else "ts timestamp"
-        src = spark.readStream.schema(
-            f"event_id bigint, {ts_ddl}, user_id bigint, event_type string, "
-            "value double, props string"
-        ).parquet(f"{sf_dir}/events*.parquet")
-        deduped = src.select("user_id", "event_type").dropDuplicates(
-            ["user_id", "event_type"]
-        )
-        with _stream_shuffle(spark):
-            q = (
-                deduped.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-    return spark.table(qname)
+    src, confs = _events_stream(spark, sf_dir)
+    deduped = src.select("user_id", "event_type").dropDuplicates(
+        ["user_id", "event_type"]
+    )
+    return _drain(deduped, qname, "append", confs=confs)
 
 
 _EWMA_ALPHA = 0.2
@@ -1298,13 +1353,7 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from uk_procurement_data_pipeline_spark.catalog import probe_events_nanos
-
     qname = f"stream_state_{zlib.crc32(sf_dir.encode()) & 0xFFFFFFFF:08x}"
-    nanos = probe_events_nanos(spark, f"{sf_dir}/events.parquet")
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def totals(key, pdfs, state):
         import numpy as np
@@ -1321,37 +1370,18 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"user_id": [key[0]], "n": [n], "vsum": [vsum]}
         )
 
-    try:
-        ts_ddl = "ts long" if nanos else "ts timestamp"
-        src = spark.readStream.schema(
-            f"event_id bigint, {ts_ddl}, user_id bigint, event_type string, "
-            "value double, props string"
-        ).parquet(f"{sf_dir}/events*.parquet")
-        running = src.select("user_id", "value").groupBy(
-            "user_id"
-        ).applyInPandasWithState(
-            totals,
-            "user_id bigint, n bigint, vsum bigint",
-            "n bigint, vsum bigint",
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-        with _stream_shuffle(spark):
-            q = (
-                running.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
+    src, confs = _events_stream(spark, sf_dir)
+    running = src.select("user_id", "value").groupBy(
+        "user_id"
+    ).applyInPandasWithState(
+        totals,
+        "user_id bigint, n bigint, vsum bigint",
+        "n bigint, vsum bigint",
+        "update",
+        GroupStateTimeout.NoTimeout,
+    )
     return (
-        spark.table(qname)
+        _drain(running, qname, "update", confs=confs)
         .groupBy("user_id")
         .agg(
             F.max("n").cast("bigint").alias("n_events"),
@@ -1572,8 +1602,6 @@ def stream_session_ttl_close(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         yield out
 
-    import pyarrow.parquet as pq
-
     n_rows = _parquet_num_rows(f"{sf_dir}/events.parquet")
     if n_rows <= _TTL_BIG_N:
         # CEIL division: floor left a 1-row remainder micro-batch that
@@ -1606,83 +1634,15 @@ def stream_session_ttl_close(spark: SparkSession, sf_dir: str) -> DataFrame:
             GroupStateTimeout.EventTimeTimeout,
         )
     )
-    # processingTime trigger + offset-drain poll, NOT availableNow: the
-    # simple-reader wrapper snapshots only the next prefetched slice under
-    # availableNow, so the stream would stop after one micro-batch. The
-    # replay source's offsets are row positions, so "drained" is exactly
-    # endOffset.pos == file row count (known from parquet metadata, no job).
-    import re
-    import time
-
-    # Small micro-batches (2-12 per run): 32 state-store shuffle
-    # partitions would be ~all task-launch overhead per batch.
-    # 8 partitions still exercises multi-partition state sharding. The
-    # checkpoint (offset/commit log + state snapshots, fsynced EVERY
-    # batch) goes to tmpfs when available — per-batch latency is commit
-    # IO, not compute, at these batch sizes; a fresh dir each run keeps
-    # the replay deterministic (a stale checkpoint would resume offsets
-    # and skip data).
-    import os
-    import shutil
-    import tempfile
-
-    ckpt_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
-    ckpt = tempfile.mkdtemp(prefix=f"ttl_ckpt_{qname}_", dir=ckpt_root)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    q = (
-        closed.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     # Deterministic drain target: the trailing no-data batch — scheduled
     # after the final data batch advances the watermark — must COMMIT
-    # before stop(), so its timer-closed sessions are always in the sink
-    # (no race between the 0.1 s poll and a ~1 s batch). That batch is
-    # observable as a progress row whose watermark equals
-    # max(ts) - delay in Spark's ms arithmetic.
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    ts_col = pq.read_table(
-        f"{sf_dir}/events.parquet", columns=["ts"], memory_map=True
-    )["ts"]
-    ts_max_us = pc.max(ts_col).cast(pa.timestamp("us")).value
-    wm_target_ms = ts_max_us // 1000 - _TTL_DELAY_US // 1000
-
-    _wm_ms = _progress_wm_ms  # shared exact-ms helper (module top)
-
-    try:
-        deadline = time.time() + 240
-        drained = False
-        while time.time() < deadline:
-            lp = q.lastProgress
-            eo = lp["sources"][0].get("endOffset") if lp else None
-            if eo and not drained:
-                # the simple-reader offset arrives as a stringified dict
-                # ({'pos': N}, single quotes — not JSON); extract the int
-                pos = eo["pos"] if isinstance(eo, dict) else int(
-                    re.search(r"-?\d+", str(eo)).group()
-                )
-                drained = int(pos) >= n_rows
-            if drained and _wm_ms(lp) >= wm_target_ms:
-                break
-            time.sleep(0.1)
-        else:
-            raise TimeoutError(
-                f"events_replay stream did not drain {n_rows} rows and "
-                f"commit the final-watermark no-data batch in 240s"
-            )
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(qname).select(
-        "user_id", "start_micro", "end_micro", "n_events"
-    )
+    # before stop(), so its timer-closed sessions are always in the sink.
+    # The replay source's offsets are row positions, so "drained" is
+    # endOffset.pos == file row count (known from parquet metadata, no job).
+    wm_ms = _final_watermark_ms(f"{sf_dir}/events.parquet", _TTL_DELAY_US)
+    return _drain(
+        closed, qname, "update", rows=n_rows, watermark_ms=wm_ms
+    ).select("user_id", "start_micro", "end_micro", "n_events")
 
 
 @register(
@@ -1722,14 +1682,7 @@ def stream_session_ttl_close(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_interval_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import re
-    import shutil
-    import tempfile
-    import time
     import zlib
-
-    import pyarrow.parquet as pq
 
     from uk_procurement_data_pipeline_spark.sources.events_replay_stream import (
         EventsReplayDataSource,
@@ -1791,10 +1744,6 @@ def stream_interval_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("lag_us"),
     )
 
-    ckpt_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
-    ckpt = tempfile.mkdtemp(prefix=f"ssj_ckpt_{qname}_", dir=ckpt_root)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     # r13 (guide §1/VERDICT r12 item 4): RocksDB state store for THIS query
     # only. Interleaved best-of-3 A/B over the 4 streaming queries:
     # RocksDB was a wash on the single-store queries (session_ttl +0.03,
@@ -1802,56 +1751,18 @@ def stream_interval_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on this two-leg stream-stream join, which keeps four state stores
     # (two per join side) per partition per batch — RocksDB's native
     # commit path beats HDFSBackedStateStore's JVM map snapshot+fsync
-    # exactly where store count x state size is highest. Conf is read at
-    # .start(), scoped like the shuffle width, env-overridable.
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
+    # exactly where store count x state size is highest. The conf is read
+    # at .start() and scoped to this drain like the shuffle width.
+    rocksdb = (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        os.environ.get(
-            "SPARK_GRAFT_SSJ_STATESTORE",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        ),
-    )
-    q = (
-        pairs.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-    if prev_provider is None:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    else:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", prev_provider
-        )
-    try:
-        deadline = time.time() + 240
-        while time.time() < deadline:
-            lp = q.lastProgress
-            if lp and lp["sources"]:
-                done = 0
-                for s in lp["sources"]:
-                    eo = s.get("endOffset")
-                    if eo is not None:
-                        pos = int(re.search(r"-?\d+", str(eo)).group())
-                        done += pos >= n_rows
-                if done == len(lp["sources"]):
-                    break
-            time.sleep(0.1)
-        else:
-            raise TimeoutError(
-                f"stream-stream join did not drain {n_rows} rows in 240s"
-            )
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(qname).select("click_id", "view_id", "user_id", "lag_us")
+    return _drain(
+        pairs,
+        qname,
+        "append",
+        rows=n_rows,
+        confs={"spark.sql.streaming.stateStore.providerClass": rocksdb},
+    ).select("click_id", "view_id", "user_id", "lag_us")
 
 
 _PATH_TOPK = 20
@@ -2809,51 +2720,25 @@ def winsorized_stats_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     import zlib
 
-    from uk_procurement_data_pipeline_spark.catalog import probe_events_nanos
-
     qname = f"stream_enrich_{zlib.crc32(sf_dir.encode()) & 0xFFFFFFFF:08x}"
     static_dim = (
         load(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.min(F.date_trunc("day", "ts")).alias("d0"))
     )
-    nanos = probe_events_nanos(spark, f"{sf_dir}/events.parquet")
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        ts_ddl = "ts long" if nanos else "ts timestamp"
-        src = spark.readStream.schema(
-            f"event_id bigint, {ts_ddl}, user_id bigint, event_type string, "
-            "value double, props string"
-        ).parquet(f"{sf_dir}/events*.parquet")
-        if nanos:
-            src = src.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        enriched = src.join(static_dim, "user_id").select(
-            "event_type",
-            (F.date_trunc("day", "ts") == F.col("d0")).alias("is_first_day"),
-            "value",
-        )
-        agg = enriched.groupBy("event_type", "is_first_day").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            exact_sum("value", "sum_value"),
-        )
-        with _stream_shuffle(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .start()
-            )
-        q.awaitTermination()
-    finally:
-        if nanos:
-            if prev is None:
-                spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-            else:
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-    return spark.table(qname).orderBy("event_type", "is_first_day")
+    src, confs = _events_stream(spark, sf_dir)
+    enriched = src.join(static_dim, "user_id").select(
+        "event_type",
+        (F.date_trunc("day", "ts") == F.col("d0")).alias("is_first_day"),
+        "value",
+    )
+    agg = enriched.groupBy("event_type", "is_first_day").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_events"),
+        exact_sum("value", "sum_value"),
+    )
+    return _drain(agg, qname, "complete", confs=confs).orderBy(
+        "event_type", "is_first_day"
+    )
 
 
 @register(
@@ -5530,16 +5415,7 @@ _LD_N_BATCHES = 3  # r11: was 4 (and 6 pre-r10); 3 is the minimum that still
     """,
 )
 def stream_late_drop_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import re
-    import shutil
-    import tempfile
-    import time
     import zlib
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
     from uk_procurement_data_pipeline_spark.sources.events_replay_stream import (
         EventsReplayDataSource,
@@ -5567,50 +5443,8 @@ def stream_late_drop_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("w_start"), "n_events")
     )
-    ckpt_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
-    ckpt = tempfile.mkdtemp(prefix=f"ld_ckpt_{qname}_", dir=ckpt_root)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-    ts_col = pq.read_table(
-        f"{sf_dir}/events.parquet", columns=["ts"], memory_map=True
-    )["ts"]
-    ts_max_us = pc.max(ts_col).cast(pa.timestamp("us")).value
-    wm_target_ms = ts_max_us // 1000 - _LD_DELAY_US // 1000
-
-    _wm_ms = _progress_wm_ms  # shared exact-ms helper (module top)
-
-    try:
-        deadline = time.time() + 240
-        drained = False
-        while time.time() < deadline:
-            lp = q.lastProgress
-            eo = lp["sources"][0].get("endOffset") if lp else None
-            if eo and not drained:
-                pos = eo["pos"] if isinstance(eo, dict) else int(
-                    re.search(r"-?\d+", str(eo)).group()
-                )
-                drained = int(pos) >= n_rows
-            if drained and _wm_ms(lp) >= wm_target_ms:
-                break
-            time.sleep(0.1)
-        else:
-            raise TimeoutError(
-                f"events_replay(scramble) did not drain {n_rows} rows and "
-                f"commit the final-watermark flush batch in 240s"
-            )
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(qname).select(
+    wm_ms = _final_watermark_ms(f"{sf_dir}/events.parquet", _LD_DELAY_US)
+    return _drain(agg, qname, "append", rows=n_rows, watermark_ms=wm_ms).select(
         F.unix_micros(F.col("w_start").cast("timestamp")).alias("w_start_us"),
         F.col("n_events").cast("bigint").alias("n_events"),
     )

@@ -795,9 +795,20 @@ def ocds_flatten_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
+    hit: set[str] = set()
+
     def _sub(expr: str) -> str:
         for src, alias in _HOIST:
-            expr = expr.replace(src, alias)
+            if src in expr:
+                hit.add(alias)
+                expr = expr.replace(src, alias)
         return expr
 
-    return rel.selectExpr(*[f"{_sub(p.s)} AS {alias}" for alias, p in _FLAT])
+    flat = [f"{_sub(p.s)} AS {alias}" for alias, p in _FLAT]
+    # A hoist whose source text no longer appears in any flatten expression
+    # (formatting drift in _FLAT) would silently fall back to per-column
+    # re-evaluation; fail at construction instead.
+    missed = [alias for _, alias in _HOIST if alias not in hit]
+    if missed:
+        raise ValueError(f"ocds_flatten_wide: hoisted probes unused: {missed}")
+    return rel.selectExpr(*flat)

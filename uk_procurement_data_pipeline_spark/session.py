@@ -11,6 +11,7 @@ would use ~2-3x total cores (AQE coalesces the excess).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -64,3 +65,24 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set each SQL conf in ``confs`` for the body, then restore it.
+
+    Every key is restored in ``finally``, so a body that raises leaves the
+    session as it found it. A key that had no value before is unset again
+    rather than set to a default.
+    """
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
