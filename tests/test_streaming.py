@@ -618,9 +618,8 @@ def _owners(path, match) -> set[str]:
 
 
 def test_conf_and_drain_idioms_stay_in_their_helpers():
-    """Conf save/restore lives in session.scoped_conf (catalog.load_events
-    is the one documented exception), and the checkpoint dir and progress
-    poll of a stream drain live in queries.events._drain."""
+    """Conf save/restore lives in session.scoped_conf, and the checkpoint
+    dir and progress poll of a stream drain live in queries.events._drain."""
     import ast
     from pathlib import Path
 
@@ -640,7 +639,7 @@ def test_conf_and_drain_idioms_stay_in_their_helpers():
         return isinstance(n, ast.Name) and n.id == "mkdtemp"
 
     conf_sites = set().union(*(_owners(p, conf_write) for p in pkg.rglob("*.py")))
-    assert conf_sites == {"session.scoped_conf", "catalog.load_events"}
+    assert conf_sites == {"session.scoped_conf"}
     drain_sites = set().union(
         *(_owners(p, drain_plumbing) for p in (pkg / "queries").glob("*.py"))
     )

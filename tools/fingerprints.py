@@ -24,9 +24,10 @@ from a fingerprinted function ARE included via repr when they are simple
 
 IMPORTANT — fingerprints are defined over IMPORT-TIME state. A module-level
 mutable container referenced from a fingerprinted function (e.g.
-catalog._NANOS_PROBE_CACHE, a per-session memo) is repr'd into the payload,
-so computing fingerprints in a process that has already RUN queries hashes
-the mutated cache and spuriously drifts most of the registry (caught in r09:
+catalog._NANOS_PROBE_CACHE and catalog._SCHEMA_CACHE, per-session memos) is
+repr'd into the payload, so computing fingerprints in a process that has
+already RUN queries hashes the mutated cache and spuriously drifts most of
+the registry (caught in r09:
 288 false "changed" queries inside the warm pytest process). changed_queries
 therefore computes current fingerprints in a FRESH subprocess; in-process
 computation is only safe immediately after import.

@@ -23,7 +23,7 @@ best-of-N re-runs — measure the true serving cost: probe against a
 built index).
 
 Staleness is structural, not timestamp-based: the fingerprint is a sha256
-over (a) the source parquet files' (relpath, size, mtime_ns) stats and
+over (a) the source parquet files' (name, size, mtime_ns) stats and
 (b) the build parameters (including a version string bumped on builder
 logic changes). New data or new params → new fingerprint → new directory
 → rebuild; the old generation stays readable until ``vacuum_stale``.
@@ -32,6 +32,11 @@ Write protocol: build into ``<dir>.tmp.<pid>`` then ``os.rename`` into
 place — atomic on one filesystem, so a concurrent builder of the same
 generation either wins the rename or discards its tmp dir and reads the
 winner. Reads only trust a directory with Spark's ``_SUCCESS`` marker.
+
+Generation reads go through ``catalog.read_parquet``: a generation's
+schema is inferred once per Spark application and directory state, so a
+repeat load of one generation runs no Spark job. A directory whose files
+change is re-inferred on its next read.
 
 ``BUILD_COUNTS`` records per-generation builder invocations in this
 process; tests pin build-once/probe-many behavior on it
@@ -53,6 +58,8 @@ from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from uk_procurement_data_pipeline_spark.catalog import file_stats, read_parquet
 
 _LOCK = threading.Lock()
 _ROOT: str | None = None
@@ -81,17 +88,9 @@ def table_fingerprint(sf_dir: str, table: str) -> str:
     """Fingerprint of one source table: file stats, not content — a 100 TB
     snapshot is identified by its manifest (paths/sizes/mtimes), never by
     re-hashing bytes."""
-    path = Path(sf_dir) / f"{table}.parquet"
-    if path.is_dir():
-        files = sorted(p for p in path.rglob("*") if p.is_file())
-    elif path.exists():
-        files = [path]
-    else:
-        raise FileNotFoundError(str(path))
     h = hashlib.sha256()
-    for p in files:
-        st = p.stat()
-        h.update(f"{p.name}|{st.st_size}|{st.st_mtime_ns}\n".encode())
+    for name, size, mtime_ns in file_stats(Path(sf_dir) / f"{table}.parquet"):
+        h.update(f"{name}|{size}|{mtime_ns}\n".encode())
     return h.hexdigest()
 
 
@@ -122,7 +121,7 @@ def build_or_load(
     key = generation_key(name, fp)
     final = Path(catalog_root()) / key
     if (final / "_SUCCESS").exists():
-        return spark.read.parquet(str(final))
+        return read_parquet(spark, str(final))
     tmp = Path(catalog_root()) / f"{key}.tmp.{os.getpid()}"
     with _LOCK:
         BUILD_COUNTS[key] = BUILD_COUNTS.get(key, 0) + 1
@@ -135,7 +134,7 @@ def build_or_load(
         shutil.rmtree(tmp, ignore_errors=True)
         if not (final / "_SUCCESS").exists():
             raise
-    return spark.read.parquet(str(final))
+    return read_parquet(spark, str(final))
 
 
 def vacuum_stale(name: str, keep_fps: set[str]) -> list[str]:

@@ -56,6 +56,13 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "64m"),
         )
         .config("spark.sql.parquet.filterPushdown", "true")
+        # Generated classes live in a Guava cache whose size limit is
+        # enforced per segment (4 segments): Spark's default of 100 evicts
+        # at 25 classes a segment, so repeated calls recompile part of
+        # their working set every time (measured: 75 classes cold for the
+        # tpch_etl benchmark queries, 21-26 recompiled per warm pass). At 1000
+        # a warm pass compiles nothing.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # NOTE: driver memory only takes effect if THIS process starts the
         # JVM; under getOrCreate against a live session it is silently
         # ignored — set SPARK_SUBMIT_OPTS for externally-launched JVMs.
