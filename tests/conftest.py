@@ -1,4 +1,5 @@
-"""Shared fixtures: one SparkSession per test session (startup ~10s),
+"""Shared fixtures: one SparkSession per test session (startup ~5 s with
+the class archive mapped, ~10 s on the launch that first records it),
 small shuffle parallelism, UTC — the same conf contract as the engine's
 session factory (SURVEY.md §5.2)."""
 

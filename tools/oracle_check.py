@@ -6,24 +6,40 @@ full (order-insensitive) set of values — STRICTER than the driver's hash
 (exact equality, no float tolerance), so anything green here hash-matches.
 
 Usage:
-    python tools/oracle_check.py [sf_dir] [query ...]
+    python tools/oracle_check.py [sf_dir] [query ...] > record.jsonl
+
+Both engines are sized to the box: Spark runs ``local[N]`` and DuckDB
+``N`` threads, where ``N`` is this process's CPU affinity, and DuckDB gets
+half of ``MemAvailable`` with a spill directory under the temp dir.
+
+stdout is the run record, one JSON object a line: a header (git head, cores,
+versions, DuckDB settings, the class archive the JVM mapped), then one line
+per query (name, sf, verdict ``match``/``rows-only``/``mismatch``/``error``,
+Spark and oracle seconds, detail), then a summary. stderr carries the same
+verdicts as one human-readable line per query.
 """
 
 from __future__ import annotations
 
+import json
 import math
+import os
+import platform
+import subprocess
 import sys
+import tempfile
 import time
 from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from uk_procurement_data_pipeline_spark.catalog import TABLES
 from uk_procurement_data_pipeline_spark.queries import registry
-from uk_procurement_data_pipeline_spark.session import get_spark
+from uk_procurement_data_pipeline_spark.session import class_archive, get_spark
 
 
 def _canon_cell(v):
@@ -46,8 +62,33 @@ def canon_rows(df: pd.DataFrame) -> list[tuple]:
     return sorted(rows)
 
 
+def _cores() -> int:
+    return len(os.sched_getaffinity(0))
+
+
+def _mem_available_mb() -> int | None:
+    try:
+        for line in Path("/proc/meminfo").read_text().splitlines():
+            if line.startswith("MemAvailable:"):
+                return int(line.split()[1]) // 1024
+    except OSError:
+        pass
+    return None
+
+
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with a view per fixture table, sized to the box:
+    one thread per core this process may run on, half of the memory
+    available now (the Spark JVM beside it keeps the rest), and a spill
+    directory that DuckDB creates on demand and removes on close."""
     con = duckdb.connect()
+    con.sql(f"SET threads = {_cores()}")
+    mem_mb = _mem_available_mb()
+    if mem_mb:
+        con.sql(f"SET memory_limit = '{max(mem_mb // 2, 512)}MB'")
+    spill = Path(tempfile.gettempdir()) / f"oracle-duckdb-{os.getpid()}"
+    con.sql(f"SET temp_directory = '{spill}'")
+    con.sql("SET enable_progress_bar = false")
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con
@@ -71,6 +112,21 @@ def check_one(spark, con, spec, sf_dir: str) -> tuple[bool, str, float]:
     return True, f"match ({len(sdf)} rows)", spark_s
 
 
+def _git_head() -> str:
+    """HEAD's sha, with ``+dirty`` when the tree has uncommitted changes."""
+    def git(*args: str) -> str:
+        return subprocess.run(["git", *args], cwd=ROOT, capture_output=True,
+                              text=True, timeout=30, check=True).stdout.strip()
+    try:
+        return git("rev-parse", "HEAD") + ("+dirty" if git("status", "--porcelain") else "")
+    except (OSError, subprocess.SubprocessError):
+        return "unknown"
+
+
+def _emit(obj: dict) -> None:
+    print(json.dumps(obj), flush=True)
+
+
 def main() -> int:
     args = sys.argv[1:]
     sf_dir = "/root/testdata/sf0.01"
@@ -82,22 +138,55 @@ def main() -> int:
         elif a in reg:
             names.append(a)
         else:
-            print(f"unknown query or sf dir {a!r}; registered: {sorted(reg)}")
+            print(f"unknown query or sf dir {a!r}; registered: {sorted(reg)}", file=sys.stderr)
             return 2
     if names:
         reg = {n: reg[n] for n in names}
-    spark = get_spark("oracle-check", master="local[8]", shuffle_partitions=8)
+    cores = _cores()
+    spark = get_spark("oracle-check", master=f"local[{cores}]", shuffle_partitions=8)
     con = duckdb_conn(sf_dir)
+    sf = Path(sf_dir).name
+    settings = con.sql(
+        "SELECT current_setting('memory_limit'), current_setting('threads'),"
+        " current_setting('temp_directory')"
+    ).fetchone()
+    _emit({
+        "git": _git_head(),
+        "nproc": cores,
+        "versions": {
+            "spark": spark.version,
+            "java": spark.sparkContext._jvm.System.getProperty("java.version"),
+            "python": platform.python_version(),
+            "duckdb": duckdb.__version__,
+        },
+        "duckdb": dict(zip(("memory_limit", "threads", "temp_directory"), settings)),
+        "class_archive": class_archive(spark),
+        "sf_dir": sf_dir,
+        "queries": len(reg),
+    })
     failures = 0
-    for name, spec in reg.items():
-        try:
-            ok, msg, secs = check_one(spark, con, spec, sf_dir)
-        except Exception as e:  # noqa: BLE001
-            ok, msg, secs = False, f"EXC {type(e).__name__}: {str(e)[:400]}", 0.0
-        status = "OK  " if ok else "FAIL"
-        print(f"{status} {name:38s} {secs:6.2f}s  {msg}")
-        failures += 0 if ok else 1
-    print(f"\n{len(reg) - failures}/{len(reg)} queries match on {sf_dir}")
+    try:
+        for name, spec in reg.items():
+            rec = {"query": name, "sf": sf}
+            t0 = time.time()
+            try:
+                ok, msg, secs = check_one(spark, con, spec, sf_dir)
+                verdict = msg.split(" ", 1)[0] if ok else "mismatch"
+                rec.update(verdict=verdict, spark_s=round(secs, 3),
+                           oracle_s=round(time.time() - t0 - secs, 3), detail=msg)
+            except Exception as e:  # noqa: BLE001
+                ok, secs = False, 0.0
+                msg = f"EXC {type(e).__name__}: {str(e)[:400]}"
+                rec.update(verdict="error", error=msg)
+            _emit(rec)
+            status = "OK  " if ok else "FAIL"
+            print(f"{status} {name:38s} {secs:6.2f}s  {msg}", file=sys.stderr, flush=True)
+            failures += 0 if ok else 1
+    finally:
+        con.close()
+    _emit({"sf_dir": sf_dir, "queries": len(reg), "passed": len(reg) - failures,
+           "failed": failures})
+    print(f"\n{len(reg) - failures}/{len(reg)} queries match on {sf_dir}", file=sys.stderr)
     return 1 if failures else 0
 
 
