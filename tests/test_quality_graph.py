@@ -126,9 +126,11 @@ def test_supplier_pagerank_covers_all_suppliers_and_no_cartesian(spark, sf_dir):
 
 def test_kmeans_assignment_is_map_side(spark, sf_dir):
     # the fold-argmin assignment must not plan a per-vector window sort;
-    # the only shuffles belong to the centroid-mean aggregations
-    plan = plan_of(spark, sf_dir, "kmeans_lloyd_cells")
-    assert "Window" not in plan
+    # the only shuffles belong to the centroid-mean aggregations. The
+    # plurality vote (top_k_per_group's k = 1 reduction) must not either;
+    # modularity_communities checkpoints its vote, so its plan cannot show it.
+    for name in ("kmeans_lloyd_cells", "label_propagation_communities"):
+        assert "Window" not in plan_of(spark, sf_dir, name), name
 
 
 def test_kmeans_moves_centroids_and_converges_assignment(spark, sf_dir):

@@ -560,7 +560,7 @@ def test_drain_start_failure_leaves_session_unchanged(spark):
 
 def test_file_streams_match_on_nanos_fixture(spark, sf_dir, tmp_path):
     """The four availableNow file streams read a TIMESTAMP(NANOS) copy of
-    events (the nanosAsLong branch no shipped fixture exercises) to the
+    events (ts declared long, a branch no shipped fixture exercises) to the
     same rows as the µs fixture, and leave nanosAsLong as they found it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -644,3 +644,39 @@ def test_conf_and_drain_idioms_stay_in_their_helpers():
         *(_owners(p, drain_plumbing) for p in (pkg / "queries").glob("*.py"))
     )
     assert drain_sites == {"events._drain"}
+
+
+def test_top_k_idioms_stay_in_their_helper():
+    """A struct argmax (min/max over F.struct, min_by/max_by in any
+    spelling) lives in topk.top_k_per_group, and similarity.py keeps only
+    the row_number windows named here, each with its reason at the site."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "uk_procurement_data_pipeline_spark"
+
+    def struct_argmax(n):
+        if isinstance(n, ast.Constant) and isinstance(n.value, str):
+            return "min_by(" in n.value or "max_by(" in n.value
+        if not isinstance(n, ast.Call) or not isinstance(n.func, ast.Attribute):
+            return False
+        if n.func.attr in ("min_by", "max_by"):
+            return True
+        return (
+            n.func.attr in ("min", "max")
+            and bool(n.args)
+            and isinstance(n.args[0], ast.Call)
+            and isinstance(n.args[0].func, ast.Attribute)
+            and n.args[0].func.attr == "struct"
+        )
+
+    def row_number(n):
+        return isinstance(n, ast.Attribute) and n.attr == "row_number"
+
+    argmax_sites = set().union(*(_owners(p, struct_argmax) for p in pkg.rglob("*.py")))
+    # golden_record_survivorship's max(struct) is one column of a wider
+    # aggregate, and its oracle is the same struct MAX, not an ORDER BY.
+    assert argmax_sites == {"topk.top_k_per_group", "dedup.golden_record_survivorship"}
+    assert _owners(pkg / "queries" / "similarity.py", row_number) == {
+        "similarity.opq_variance_balanced_pq",  # ranks the whole dim domain
+    }

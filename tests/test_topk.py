@@ -1,0 +1,153 @@
+"""top_k_per_group against DuckDB's ``row_number() OVER (... ORDER BY ...)``
+on random frames with NULL, NaN, ±inf and ±0.0 in the order columns and
+ties on the leading key. DuckDB reads the frame through Arrow: its pandas
+scan reads a NaN produced by ``toPandas()`` as NULL, which would hide the
+very cases this test exists for."""
+
+from __future__ import annotations
+
+import math
+import sys
+from pathlib import Path
+
+import duckdb
+import pyarrow as pa
+import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+
+from uk_procurement_data_pipeline_spark.functions.topk import top_k_per_group
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+
+_SCHEMA = "g1 int, g2 int, x double, n bigint, s string, id bigint"
+_NAN, _INF = float("nan"), float("inf")
+
+_ROW = st.tuples(
+    st.integers(0, 2),
+    st.integers(0, 1),
+    st.sampled_from([None, _NAN, _INF, -_INF, 0.0, -0.0, 1.5, -2.25]),
+    st.sampled_from([None, -(2**63), -1, 0, 7, 2**63 - 1]),
+    st.sampled_from([None, "", "a", "b"]),
+)
+_KEYS = st.sampled_from([[], ["g1"], ["g1", "g2"]])
+# leading terms over the tie-heavy columns, then the unique id tiebreak
+_ORDER = st.tuples(
+    st.lists(
+        st.tuples(st.sampled_from(["x", "n", "s"]), st.booleans()),
+        min_size=1,
+        max_size=3,
+        unique_by=lambda t: t[0],
+    ),
+    st.booleans(),
+).map(
+    lambda t: [f"{c} DESC" if d else c for c, d in t[0]]
+    + ["id DESC" if t[1] else "id"]
+)
+
+
+def _canon(rows):
+    """Rows as tuples ordered by the unique id, NaN as a comparable token."""
+    return sorted(
+        (
+            tuple("NaN" if isinstance(v, float) and math.isnan(v) else v for v in r)
+            for r in rows
+        ),
+        key=lambda r: r[5],
+    )
+
+
+def _duckdb_top_k(rows, keys, order, k):
+    cols = list(zip(*rows)) if rows else [[]] * 6
+    frame = pa.table(
+        {
+            "g1": pa.array(cols[0], pa.int32()),
+            "g2": pa.array(cols[1], pa.int32()),
+            "x": pa.array(cols[2], pa.float64()),
+            "n": pa.array(cols[3], pa.int64()),
+            "s": pa.array(cols[4], pa.string()),
+            "id": pa.array(cols[5], pa.int64()),
+        }
+    )
+    part = f"PARTITION BY {', '.join(keys)}" if keys else ""
+    con = duckdb.connect()
+    try:
+        con.register("frame", frame)
+        return con.sql(
+            f"SELECT * FROM (SELECT *, row_number() OVER ({part} ORDER BY"
+            f" {', '.join(order)}) AS rank FROM frame) WHERE rank <= {k}"
+        ).fetchall()
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize("k", [1, 2, 5])
+def test_top_k_per_group_matches_duckdb_order_by(spark, k):
+    @settings(max_examples=30, deadline=None, derandomize=True, database=None)
+    @given(st.lists(_ROW, max_size=30), _KEYS, _ORDER)
+    @example([(0, 0, 0.5, 0, "a"), (0, 0, _NAN, 0, "a"), (0, 0, None, 0, "a")],
+             ["g1"], ["x DESC", "id"])
+    @example([], [], ["x DESC", "id"])
+    def check(rows, keys, order):
+        rows = [(*r, i) for i, r in enumerate(rows)]
+        df = spark.createDataFrame(rows, _SCHEMA)
+        got = top_k_per_group(df, keys, order, k, rank="rank")
+        assert got.columns == [*df.columns, "rank"]
+        want = _duckdb_top_k(rows, keys, order, k)
+        assert _canon(got.collect()) == _canon(want), (keys, order)
+
+    check()
+
+
+def test_top_1_reduces_without_a_window_unless_a_desc_term_has_no_negation(spark):
+    """k = 1 plans an aggregate (no Window) for numeric keys in either
+    direction; a DESC string key falls back to the window."""
+    df = spark.createDataFrame([(0, 0, 1.0, 1, "a", 0)], _SCHEMA)
+
+    def plan(order):
+        return top_k_per_group(df, ["g1"], order, 1)._jdf.queryExecution().toString()
+
+    for order in (["x DESC", "n DESC", "id"], ["x", "n", "s", "id DESC"]):
+        assert "Window" not in plan(order), order
+    assert "Window" in plan(["s DESC", "id"])
+
+
+def test_hard_negatives_lsh_matches_oracle_on_nan_and_null_cosines(spark, sf_dir, tmp_path):
+    """One embedding gets a NaN element and one in another LSH bucket a
+    NULL element, so every cosine through the first is NaN and through the
+    second NULL. The oracle's ORDER BY cosine DESC takes a NaN candidate
+    first and a NULL one last; the query must pick the same negatives."""
+    import pyarrow.parquet as pq
+    from oracle_check import check_one, duckdb_conn
+
+    from uk_procurement_data_pipeline_spark.queries import registry
+
+    for f in Path(sf_dir).iterdir():
+        if f.name != "embeddings.parquet":
+            (tmp_path / f.name).symlink_to(f)
+    emb = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    vecs = emb.column("embedding").to_pylist()
+
+    def bucket(v):  # the queries' sign-bit key over the first 4 dims
+        return [x >= 0 for x in v[:4]]
+
+    nan_row = 0
+    null_row = next(i for i, v in enumerate(vecs) if bucket(v) != bucket(vecs[0]))
+    vecs[nan_row][10] = float("nan")
+    vecs[null_row][10] = None
+    col = emb.schema.get_field_index("embedding")
+    pq.write_table(
+        emb.set_column(col, emb.schema.field(col), pa.array(vecs, emb.schema.field(col).type)),
+        tmp_path / "embeddings.parquet",
+    )
+
+    spec = registry()["hard_negatives_lsh"]
+    nan_id = emb.column("vec_id")[nan_row].as_py()
+    picked = spec.fn(spark, str(tmp_path)).where(f"anchor_id <> {nan_id}")
+    assert picked.where(f"negative_id = {nan_id}").count() > 0  # NaN ranks first
+    con = duckdb_conn(str(tmp_path))
+    try:
+        ok, msg, _ = check_one(spark, con, spec, str(tmp_path))
+    finally:
+        con.close()
+    assert ok, msg

@@ -175,25 +175,21 @@ def _final_watermark_ms(path: str, delay_us: int) -> int:
     return pc.max(ts).cast(pa.timestamp("us")).value // 1000 - delay_us // 1000
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
-    """File stream over ``sf_dir``'s events parquet, plus the confs its run
-    needs (pass them to ``_drain``).
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File stream over ``sf_dir``'s events parquet.
 
     The fixture's ts has been TIMESTAMP(MICROS) or TIMESTAMP(NANOS) across
-    driver rounds. A nanos file is read with ts declared as long, under the
-    nanosAsLong lowering held for the whole drain, and truncated ns -> µs
-    exactly as ``catalog.load_events`` does. The probe re-raises non-nanos
-    failures (missing or corrupt file).
+    fixture versions. A nanos file is read with ts declared as long and
+    truncated ns -> µs exactly as ``catalog.load_events`` does; Spark 4.1
+    reads a NANOS column declared long without the nanosAsLong conf. The
+    probe re-raises non-nanos failures (missing or corrupt file).
     """
     nanos = probe_events_nanos(spark, f"{sf_dir}/events.parquet")
     ddl = EVENTS_DDL.replace("ts timestamp", "ts long") if nanos else EVENTS_DDL
     src = spark.readStream.schema(ddl).parquet(f"{sf_dir}/events*.parquet")
     if not nanos:
-        return src, {}
-    return (
-        src.withColumn("ts", F.expr("timestamp_micros(ts div 1000)")),
-        {"spark.sql.legacy.parquet.nanosAsLong": "true"},
-    )
+        return src
+    return src.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
 
 
 @register(
@@ -288,7 +284,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import zlib
 
     qname = f"stream_tumbling_{zlib.crc32(sf_dir.encode()) & 0xFFFFFFFF:08x}"
-    src, confs = _events_stream(spark, sf_dir)
+    src = _events_stream(spark, sf_dir)
     win = (
         src.groupBy(F.window("ts", "10 minutes"), "event_type")
         .agg(
@@ -303,7 +299,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    return _drain(win, qname, "complete", confs=confs)
+    return _drain(win, qname, "complete")
 
 
 @register(
@@ -862,11 +858,11 @@ def stream_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import zlib
 
     qname = f"stream_dedup_{zlib.crc32(sf_dir.encode()) & 0xFFFFFFFF:08x}"
-    src, confs = _events_stream(spark, sf_dir)
+    src = _events_stream(spark, sf_dir)
     deduped = src.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    return _drain(deduped, qname, "append", confs=confs)
+    return _drain(deduped, qname, "append")
 
 
 _EWMA_ALPHA = 0.2
@@ -1370,7 +1366,7 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"user_id": [key[0]], "n": [n], "vsum": [vsum]}
         )
 
-    src, confs = _events_stream(spark, sf_dir)
+    src = _events_stream(spark, sf_dir)
     running = src.select("user_id", "value").groupBy(
         "user_id"
     ).applyInPandasWithState(
@@ -1381,7 +1377,7 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         GroupStateTimeout.NoTimeout,
     )
     return (
-        _drain(running, qname, "update", confs=confs)
+        _drain(running, qname, "update")
         .groupBy("user_id")
         .agg(
             F.max("n").cast("bigint").alias("n_events"),
@@ -2726,7 +2722,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min(F.date_trunc("day", "ts")).alias("d0"))
     )
-    src, confs = _events_stream(spark, sf_dir)
+    src = _events_stream(spark, sf_dir)
     enriched = src.join(static_dim, "user_id").select(
         "event_type",
         (F.date_trunc("day", "ts") == F.col("d0")).alias("is_first_day"),
@@ -2736,7 +2732,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
         exact_sum("value", "sum_value"),
     )
-    return _drain(agg, qname, "complete", confs=confs).orderBy(
+    return _drain(agg, qname, "complete").orderBy(
         "event_type", "is_first_day"
     )
 

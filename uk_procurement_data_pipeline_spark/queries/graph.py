@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from uk_procurement_data_pipeline_spark.catalog import load
 from uk_procurement_data_pipeline_spark.functions.exact import exact_sum, oracle_sum
+from uk_procurement_data_pipeline_spark.functions.topk import top_k_per_group
 from uk_procurement_data_pipeline_spark.queries.base import register
 
 _DAMP = 0.85
@@ -745,14 +746,9 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy(F.col("src").alias("v2"), "lab")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
-    # r12 optimization: plurality argmax via min_by over (-cnt, lab)
-    # structs — identical to the old row_number window's ORDER BY
-    # cnt DESC, lab ASC with rn=1 (the struct key is unique per group, so
-    # min_by is deterministic), but a single-pass partial+final aggregate
-    # instead of a full shuffle+sort window.
-    l2 = votes2.groupBy("v2").agg(
-        F.expr("min_by(lab, struct(-cnt AS nc, lab AS lb))").alias("lab")
-    ).selectExpr("v2 AS v", "lab")
+    l2 = top_k_per_group(votes2, ["v2"], ["cnt DESC", "lab"], 1).selectExpr(
+        "v2 AS v", "lab"
+    )
     return (
         l2.groupBy(F.col("lab").alias("community"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("size"))
@@ -935,8 +931,7 @@ def modularity_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r12 optimization (guide §2.4, shared with label_propagation_
     # communities): e is DISTINCT so round-1 plurality = min(dst) — one
-    # hash agg, no window; round-2 plurality = min_by over (-cnt, lab)
-    # structs — one partial+final agg, no window shuffle+sort.
+    # hash agg, no window.
     l1 = e.groupBy("src").agg(F.min("dst").alias("lab")).selectExpr(
         "src AS v", "lab"
     )
@@ -946,8 +941,7 @@ def modularity_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
     l2 = (
-        votes2.groupBy("v2")
-        .agg(F.expr("min_by(lab, struct(-cnt AS nc, lab AS lb))").alias("lab"))
+        top_k_per_group(votes2, ["v2"], ["cnt DESC", "lab"], 1)
         .selectExpr("v2 AS v", "lab")
         .localCheckpoint(eager=True)  # labels feed 3 joins
     )

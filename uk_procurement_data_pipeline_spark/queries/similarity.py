@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from uk_procurement_data_pipeline_spark.catalog import load
 from uk_procurement_data_pipeline_spark.functions.exact import oracle_sum
+from uk_procurement_data_pipeline_spark.functions.topk import top_k_per_group
 from uk_procurement_data_pipeline_spark.queries.base import register
 
 _TOPK = 5
@@ -90,11 +91,8 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id AS neighbor_id",
         f"{_DOT.format(a='qv', b='embedding')} / (qn * nrm) AS cosine",
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= _TOPK)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return top_k_per_group(
+        pairs, ["query_id"], ["cosine DESC", "neighbor_id"], _TOPK, rank="rank"
     )
 
 
@@ -180,13 +178,8 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()  # a neighbor is in exactly one bucket, but stay safe
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return top_k_per_group(
+        pairs, ["query_id"], ["cosine DESC", "neighbor_id"], 3, rank="rank"
     )
 
 
@@ -263,15 +256,12 @@ def ann_ivf_probed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "centroid_id",
         f"{_DOT.format(a='embedding', b='cv')} / (nrm * cn) AS ccos",
     )
-    wc = Window.partitionBy("vec_id").orderBy(
-        F.col("ccos").desc(), F.col("centroid_id")
-    )
-    ranked = assign.withColumn("crn", F.row_number().over(wc))
-    cells = ranked.where(F.col("crn") == 1).selectExpr(
+    best = ["ccos DESC", "centroid_id"]
+    cells = top_k_per_group(assign, ["vec_id"], best, 1).selectExpr(
         "vec_id", "embedding", "nrm", "centroid_id AS cell"
     )
-    qc = ranked.where(
-        (F.col("vec_id") % 100 == 0) & (F.col("crn") <= _IVF_PROBE)
+    qc = top_k_per_group(
+        assign.where(F.col("vec_id") % 100 == 0), ["vec_id"], best, _IVF_PROBE
     ).selectExpr("vec_id AS query_id", "embedding AS qv", "nrm AS qn", "centroid_id AS cell")
     pairs = cells.join(
         F.broadcast(qc.withColumnRenamed("cell", "qcell")),
@@ -281,13 +271,8 @@ def ann_ivf_probed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id AS neighbor_id",
         f"{_DOT.format(a='qv', b='embedding')} / (qn * nrm) AS cosine",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return top_k_per_group(
+        pairs, ["query_id"], ["cosine DESC", "neighbor_id"], 3, rank="rank"
     )
 
 
@@ -338,11 +323,8 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id AS neighbor_id",
         f"{_DOT.format(a='qv', b='embedding')} / (qn * nrm) AS cosine",
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return top_k_per_group(
+        pairs, ["query_id"], ["cosine DESC", "neighbor_id"], 3, rank="rank"
     )
 
 
@@ -620,8 +602,8 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "most-cosine-similar neighbor with a DIFFERENT label, searched only "
     "within its sign-bit LSH bucket (the same bucket equi-join as "
     "ann_lsh_bucketed, so candidate generation is linear-shuffle, never "
-    "all-pairs) and reduced per anchor by a (cosine DESC, id) "
-    "row_number. The classic 'hardest in-batch negative' but computed "
+    "all-pairs) and reduced to each anchor's top-1 under (cosine DESC, "
+    "id). The classic 'hardest in-batch negative' but computed "
     "corpus-wide and deterministically.",
     oracle=f"""
         WITH e AS (
@@ -672,33 +654,8 @@ def hard_negatives_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "negative_label",
         f"{_DOT.format(a='av', b='zv')} / (an * zn) AS cosine",
     )
-    # r13 (guide §2.4): the top-1-per-anchor reduction was a row_number
-    # window — a full exchange + sort of every candidate pair. One
-    # min(struct(-cosine, negative_id, ...)) aggregate picks the same row
-    # ((cosine DESC, negative_id ASC) == ascending (-cosine, negative_id);
-    # struct comparison is field-lexicographic with Double.compare
-    # semantics, the same ordering the window sort used), and the partial
-    # aggregate reduces each map partition to one candidate per anchor
-    # BEFORE the shuffle.
-    return (
-        pairs.groupBy("anchor_id", "label")
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("cosine")).alias("nc"),
-                    F.col("negative_id").alias("nid"),
-                    F.col("negative_label").alias("nlb"),
-                    F.col("cosine").alias("cos"),
-                )
-            ).alias("s")
-        )
-        .select(
-            "anchor_id",
-            "label",
-            F.col("s.nid").alias("negative_id"),
-            F.col("s.nlb").alias("negative_label"),
-            F.col("s.cos").alias("cosine"),
-        )
+    return top_k_per_group(
+        pairs, ["anchor_id", "label"], ["cosine DESC", "negative_id"], 1
     )
 
 
@@ -928,13 +885,8 @@ def rrf_fusion_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint").alias("rrf_score")
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_score").desc(), F.col("neighbor_id")
-    )
-    return (
-        fused.withColumn("fused_rank", F.row_number().over(w))
-        .where(F.col("fused_rank") <= 3)
-        .select("query_id", "neighbor_id", "rrf_score", "fused_rank")
+    return top_k_per_group(
+        fused, ["query_id"], ["rrf_score DESC", "neighbor_id"], 3, rank="fused_rank"
     )
 
 
@@ -1448,18 +1400,13 @@ def kmeans_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cluster", "label")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    w = Window.partitionBy("cluster").orderBy(F.col("n").desc(), "label")
     per_cluster = cells.groupBy("cluster").agg(
         F.sum("n").cast("bigint").alias("n_vectors")
     )
-    majority = (
-        cells.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select(
-            "cluster",
-            F.col("label").alias("majority_label"),
-            F.col("n").alias("n_majority"),
-        )
+    majority = top_k_per_group(cells, ["cluster"], ["n DESC", "label"], 1).select(
+        "cluster",
+        F.col("label").alias("majority_label"),
+        F.col("n").alias("n_majority"),
     )
     return (
         per_cluster.join(F.broadcast(majority), "cluster")
@@ -1827,13 +1774,12 @@ def mmr_diversified_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{_DOT.format(a='a.embedding', b='b.embedding')} / (a.nrm * b.nrm) AS sim",
     ).localCheckpoint(eager=True)
 
-    def pick_first(df: DataFrame, order_col: str) -> DataFrame:
-        w = Window.orderBy(F.col(order_col).desc(), "vec_id")
-        return df.withColumn("rn", F.row_number().over(w)).where(
-            F.col("rn") == 1
-        ).select("vec_id", "rel", F.col(order_col).alias("mmr"))
+    def pick_first(df: DataFrame) -> DataFrame:
+        return top_k_per_group(df, [], ["score DESC", "vec_id"], 1).select(
+            "vec_id", "rel", F.col("score").alias("mmr")
+        )
 
-    s1 = pick_first(cand.select("vec_id", "rel", F.col("rel").alias("score")), "score")
+    s1 = pick_first(cand.select("vec_id", "rel", F.col("rel").alias("score")))
     picked = s1.select("vec_id")
     rounds = [s1]
     for _ in range(3):
@@ -1844,7 +1790,7 @@ def mmr_diversified_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("vec_id", "rel")
             .agg((F.lit(0.7) * F.col("rel") - F.lit(0.3) * F.max("sim")).alias("score"))
         )
-        s = pick_first(scored_r, "score")
+        s = pick_first(scored_r)
         rounds.append(s)
         picked = picked.unionByName(s.select("vec_id"))
     out = None
@@ -1938,31 +1884,21 @@ def ann_ndcg_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id AS query_id", "embedding AS qv", "nrm AS qn", "bucket AS qbucket"
     )
     cos = f"{_DOT.format(a='qv', b='embedding')} / (qn * nrm)"
-    wq = Window.partitionBy("query_id")
-    truth = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .selectExpr("query_id", "vec_id AS neighbor_id", f"{cos} AS cosine")
-        .withColumn(
-            "rn",
-            F.row_number().over(wq.orderBy(F.desc("cosine"), "neighbor_id")),
-        )
-        .where(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id", (6 - F.col("rn")).cast("bigint").alias("rel"))
-    )
-    sys_ = (
+    best = ["cosine DESC", "neighbor_id"]
+    truth = top_k_per_group(
+        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).selectExpr(
+            "query_id", "vec_id AS neighbor_id", f"{cos} AS cosine"
+        ),
+        ["query_id"], best, 5, rank="rn",
+    ).select("query_id", "neighbor_id", (6 - F.col("rn")).cast("bigint").alias("rel"))
+    sys_ = top_k_per_group(
         e.join(
             F.broadcast(q),
             (F.col("bucket") == F.col("qbucket"))
             & (F.col("vec_id") != F.col("query_id")),
-        )
-        .selectExpr("query_id", "vec_id AS neighbor_id", f"{cos} AS cosine")
-        .withColumn(
-            "rn",
-            F.row_number().over(wq.orderBy(F.desc("cosine"), "neighbor_id")),
-        )
-        .where(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id", F.col("rn").alias("rank"))
-    )
+        ).selectExpr("query_id", "vec_id AS neighbor_id", f"{cos} AS cosine"),
+        ["query_id"], best, 5, rank="rank",
+    ).select("query_id", "neighbor_id", "rank")
     scored = (
         sys_.join(truth, ["query_id", "neighbor_id"], "left")
         .groupBy("query_id")
@@ -2318,8 +2254,6 @@ def geometric_median_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from uk_procurement_data_pipeline_spark.functions.exact import exact_avg
 
     ms = spark.range(0, 4).select(F.col("id").cast("bigint").alias("m"))
@@ -2392,12 +2326,9 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("adc")
         )
     )
-    w = Window.partitionBy("query_id").orderBy("adc", "neighbor_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .select("query_id", F.col("rank").cast("bigint").alias("rank"), "neighbor_id", "adc")
-    )
+    return top_k_per_group(
+        adc, ["query_id"], ["adc", "neighbor_id"], 5, rank="rank"
+    ).select("query_id", F.col("rank").cast("bigint").alias("rank"), "neighbor_id", "adc")
 
 
 _PQR_K = 16  # centroids per subspace for the serving-grade codebook
@@ -2501,8 +2432,6 @@ _PQR_SLS = [20, 100, 500]  # ADC shortlist sizes probed
     """,
 )
 def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from uk_procurement_data_pipeline_spark.functions.exact import exact_avg
 
     ms = spark.range(0, 4).select(F.col("id").cast("bigint").alias("m"))
@@ -2562,8 +2491,7 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id", "m", "cid", f"{_SQD.format(a='v', b='cv')} AS d2"
         )
     )
-    wq = Window.partitionBy("query_id").orderBy("adc", "neighbor_id")
-    adc_topk = (
+    adc = (
         codes.join(F.broadcast(lut), ["m", "cid"])
         .where(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
@@ -2572,7 +2500,10 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("adc")
         )
-        .withColumn("rank", F.row_number().over(wq))
+    )
+    # ranks past the widest shortlist never count as hits
+    adc_topk = top_k_per_group(
+        adc, ["query_id"], ["adc", "neighbor_id"], max(_PQR_SLS), rank="rank"
     )
     vd = emb.selectExpr(
         "vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
@@ -2580,19 +2511,16 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = vd.where((F.col("vec_id") >= 16) & (F.col("vec_id") < 20)).selectExpr(
         "vec_id AS query_id", "v AS qv"
     )
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
+    exact = top_k_per_group(
         vd.crossJoin(F.broadcast(q))
         .where(F.col("vec_id") != F.col("query_id"))
         .selectExpr(
             "query_id",
             "vec_id AS neighbor_id",
             f"{_SQD.format(a='qv', b='v')} AS d2",
-        )
-        .withColumn("rank", F.row_number().over(we))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id")
-    )
+        ),
+        ["query_id"], ["d2", "neighbor_id"], 5,
+    ).select("query_id", "neighbor_id")
     sls = spark.createDataFrame([(s,) for s in _PQR_SLS], "sl int")
     return (
         exact.crossJoin(F.broadcast(sls))
@@ -2667,8 +2595,6 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def late_interaction_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     tok = load(spark, sf_dir, "embeddings").selectExpr(
         "vec_id div 4 AS doc_id", "vec_id % 4 AS tok_idx", "embedding"
     )
@@ -2692,18 +2618,10 @@ def late_interaction_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = best.groupBy("query_id", "doc_id").agg(
         F.sum("m").cast("bigint").alias("maxsim_micro")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("maxsim_micro"), "doc_id"
-    )
-    return (
-        score.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .select(
-            "query_id",
-            F.col("rank").cast("bigint").alias("rank"),
-            "doc_id",
-            "maxsim_micro",
-        )
+    return top_k_per_group(
+        score, ["query_id"], ["maxsim_micro DESC", "doc_id"], 5, rank="rank"
+    ).select(
+        "query_id", F.col("rank").cast("bigint").alias("rank"), "doc_id", "maxsim_micro"
     )
 
 
@@ -2825,8 +2743,6 @@ _TS_SL = 10  # per-query-token ADC shortlist depth before the exact rerank
     """,
 )
 def two_stage_pq_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from uk_procurement_data_pipeline_spark.functions.exact import exact_avg
 
     emb = load(spark, sf_dir, "embeddings")
@@ -2887,8 +2803,7 @@ def two_stage_pq_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{_SQD.format(a='v', b='cv')} AS d2",
         )
     )
-    ws = Window.partitionBy("qtok").orderBy("adc", "neighbor_tok")
-    shortlist = (
+    shortlist = top_k_per_group(
         codes.join(F.broadcast(lut), ["m", "cid"])
         .where(F.expr("vec_id div 4") != F.col("query_id"))
         .groupBy("qtok", "query_id", F.col("vec_id").alias("neighbor_tok"))
@@ -2896,13 +2811,12 @@ def two_stage_pq_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(F.col("d2").cast("decimal(38,8)")), 4)
             .cast("double")
             .alias("adc")
-        )
-        .withColumn("r", F.row_number().over(ws))
-        .where(F.col("r") <= _TS_SL)
+        ),
+        ["qtok"], ["adc", "neighbor_tok"], _TS_SL,
     )
     cands = shortlist.selectExpr(
         "query_id", "neighbor_tok div 4 AS doc_id"
-    ).distinct().localCheckpoint(eager=True)  # 2 consumers: ncand + rerank (r12).localCheckpoint(eager=True)  # 2 consumers: ncand + rerank (r12)
+    ).distinct().localCheckpoint(eager=True)  # 2 consumers: ncand + rerank (r12)
     ncand = cands.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_candidates")
     )
@@ -2925,12 +2839,10 @@ def two_stage_pq_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "doc_id")
         .agg(F.sum("mx").cast("bigint").alias("maxsim_micro"))
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.desc("maxsim_micro"), "doc_id"
-    )
     return (
-        score.withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= 5)
+        top_k_per_group(
+            score, ["query_id"], ["maxsim_micro DESC", "doc_id"], 5, rank="rank"
+        )
         .join(F.broadcast(ncand), "query_id")
         .select(
             "query_id",
@@ -3062,8 +2974,8 @@ def opq_variance_balanced_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_sum(F.expr("x * x"), "s2"),
         F.count("x").cast("double").alias("n"),
     )
-    # 64-row bounded domain: the ranking window sees one row per embedding
-    # dimension (plan_lint GLOBALWIN whitelisted on that justification).
+    # A window, not top_k_per_group: it ranks the whole 64-row dimension
+    # domain (plan_lint GLOBALWIN whitelisted on that bound).
     wr = Window.orderBy(
         (F.col("s2") * F.col("n") - F.col("s1") * F.col("s1")).desc(),
         F.col("dim"),
@@ -3423,12 +3335,7 @@ def graph_ann_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.min("d2").alias("d2"))
     )
-    wnb = Window.partitionBy("src").orderBy("d2", "dst")
-    nb0 = (
-        pairs.withColumn("rn", F.row_number().over(wnb))
-        .where(F.col("rn") <= _GB_M)
-        .select("src", "dst")
-    )
+    nb0 = top_k_per_group(pairs, ["src"], ["d2", "dst"], _GB_M).select("src", "dst")
     # symmetrize: HNSW's reverse links. Undirected edges lift measured
     # recall@beam materially (9->18 of 20 at sf0.1 with the wider M/B).
     nb_built = nb0.union(
@@ -3466,15 +3373,11 @@ def graph_ann_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = e.where((F.col("vec_id") % _GB_SEEDMOD) == 0).selectExpr(
         "vec_id AS node", "v AS nv"
     )
-    wq = Window.partitionBy("query_id").orderBy("d2", "node")
+    nearest = ["d2", "node"]
     s0 = q.join(F.broadcast(seeds), F.expr("node <> query_id")).selectExpr(
         "query_id", "node", f"{_SQD.format(a='qv', b='nv')} AS d2"
     )
-    beam = (
-        s0.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= _GB_B)
-        .select("query_id", "node")
-    )
+    beam = top_k_per_group(s0, ["query_id"], nearest, _GB_B, rank="rank")
     qv = q.select("query_id", "qv")
     # Self-loop-augmented edges: `beam ∪ out-neighbors` as ONE join per
     # hop, so each hop references its predecessor exactly once. The old
@@ -3502,26 +3405,18 @@ def graph_ann_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "query_id", "node", f"{_SQD.format(a='qv', b='nv')} AS d2"
             )
         )
-        beam = (
-            scored.withColumn("rn", F.row_number().over(wq))
-            .where(F.col("rn") <= _GB_B)
-            .select("query_id", "node", "d2")
-        )
-    truth = (
-        q.join(F.broadcast(ev), F.expr("node <> query_id"))
-        .selectExpr(
+        beam = top_k_per_group(scored, ["query_id"], nearest, _GB_B, rank="rank")
+    truth = top_k_per_group(
+        q.join(F.broadcast(ev), F.expr("node <> query_id")).selectExpr(
             "query_id", "node", f"{_SQD.format(a='qv', b='nv')} AS d2"
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") == 1)
-        .selectExpr("query_id", "node AS true_nn")
-    )
+        ),
+        ["query_id"], nearest, 1,
+    ).selectExpr("query_id", "node AS true_nn")
     return (
-        beam.withColumn("rank", F.row_number().over(wq).cast("bigint"))
-        .join(F.broadcast(truth), "query_id")
+        beam.join(F.broadcast(truth), "query_id")
         .selectExpr(
             "query_id",
-            "rank",
+            "CAST(rank AS BIGINT) AS rank",
             "node AS node_id",
             "d2",
             "CAST(IF(node = true_nn, 1, 0) AS BIGINT) AS hit",
@@ -3785,8 +3680,7 @@ def ann_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e, cc, cent1, codes = _ivfpq_artifacts(spark, sf_dir)
 
     # query probing: top-PROBE cells per query by exact coarse distance
-    wq = Window.partitionBy("query_id").orderBy("cd2", "ccid")
-    qp = (
+    qp = top_k_per_group(
         e.where(
             (F.col("vec_id") >= _IVFPQ_QLO) & (F.col("vec_id") < _IVFPQ_QHI)
         )
@@ -3795,12 +3689,10 @@ def ann_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "query_id", "v", "ccid", "ccv",
             f"{_SQD.format(a='v', b='ccv')} AS cd2",
-        )
-        .withColumn("prn", F.row_number().over(wq))
-        .where(F.col("prn") <= _IVFPQ_PROBE)
-        .selectExpr(
-            "query_id", "ccid", "zip_with(v, ccv, (x, c) -> x - c) AS qr"
-        )
+        ),
+        ["query_id"], ["cd2", "ccid"], _IVFPQ_PROBE,
+    ).selectExpr(
+        "query_id", "ccid", "zip_with(v, ccv, (x, c) -> x - c) AS qr"
     )
     qsub = qp.crossJoin(
         F.broadcast(spark.range(0, 4).selectExpr("id AS m"))
@@ -3824,17 +3716,9 @@ def ann_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("adc")
         )
     )
-    wr = Window.partitionBy("query_id").orderBy("adc", "neighbor_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= 5)
-        .select(
-            "query_id",
-            F.col("rank").cast("bigint").alias("rank"),
-            "neighbor_id",
-            "adc",
-        )
-    )
+    return top_k_per_group(
+        adc, ["query_id"], ["adc", "neighbor_id"], 5, rank="rank"
+    ).select("query_id", F.col("rank").cast("bigint").alias("rank"), "neighbor_id", "adc")
 
 
 _IVFPQ_NPROBES = (1, 2, 4)
@@ -3926,8 +3810,7 @@ _IVFPQ_NPROBES = (1, 2, 4)
 def ivfpq_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     e, cc, cent1, codes = _ivfpq_artifacts(spark, sf_dir)
     maxp = max(_IVFPQ_NPROBES)
-    wq = Window.partitionBy("query_id").orderBy("cd2", "ccid")
-    qp = (
+    qp = top_k_per_group(
         e.where(
             (F.col("vec_id") >= _IVFPQ_QLO) & (F.col("vec_id") < _IVFPQ_QHI)
         )
@@ -3936,13 +3819,11 @@ def ivfpq_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "query_id", "v", "ccid", "ccv",
             f"{_SQD.format(a='v', b='ccv')} AS cd2",
-        )
-        .withColumn("prn", F.row_number().over(wq))
-        .where(F.col("prn") <= maxp)
-        .selectExpr(
-            "query_id", "ccid", "prn",
-            "zip_with(v, ccv, (x, c) -> x - c) AS qr",
-        )
+        ),
+        ["query_id"], ["cd2", "ccid"], maxp, rank="prn",
+    ).selectExpr(
+        "query_id", "ccid", "prn",
+        "zip_with(v, ccv, (x, c) -> x - c) AS qr",
     )
     qsub = qp.crossJoin(
         F.broadcast(spark.range(0, 4).selectExpr("id AS m"))
@@ -3975,31 +3856,23 @@ def ivfpq_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     nps = spark.createDataFrame(
         [(n,) for n in _IVFPQ_NPROBES], "nprobe int"
     )
-    wr = Window.partitionBy("query_id", "nprobe").orderBy(
-        "adc", "neighbor_id"
-    )
-    ranked = (
-        adc.join(F.broadcast(nps), F.col("cell_prn") <= F.col("nprobe"))
-        .withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "nprobe", "neighbor_id", F.lit(1).alias("is_hit"))
-    )
+    ranked = top_k_per_group(
+        adc.join(F.broadcast(nps), F.col("cell_prn") <= F.col("nprobe")),
+        ["query_id", "nprobe"], ["adc", "neighbor_id"], 5,
+    ).select("query_id", "nprobe", "neighbor_id", F.lit(1).alias("is_hit"))
     q = e.where(
         (F.col("vec_id") >= _IVFPQ_QLO) & (F.col("vec_id") < _IVFPQ_QHI)
     ).selectExpr("vec_id AS query_id", "v AS qv")
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
+    exact = top_k_per_group(
         e.crossJoin(F.broadcast(q))
         .where(F.col("vec_id") != F.col("query_id"))
         .selectExpr(
             "query_id",
             "vec_id AS neighbor_id",
             f"{_SQD.format(a='qv', b='v')} AS d2",
-        )
-        .withColumn("rank", F.row_number().over(we))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id")
-    )
+        ),
+        ["query_id"], ["d2", "neighbor_id"], 5,
+    ).select("query_id", "neighbor_id")
     return (
         exact.crossJoin(F.broadcast(nps))
         .join(ranked, ["query_id", "nprobe", "neighbor_id"], "left")
@@ -4090,8 +3963,7 @@ def ivfpq_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_where=f"vec_id % {_IVFPQ_NEW_MOD} != {_IVFPQ_NEW_REM}",
         tag=f"hist_mod{_IVFPQ_NEW_MOD}ne{_IVFPQ_NEW_REM}",
     )
-    wq = Window.partitionBy("query_id").orderBy("cd2", "ccid")
-    qp = (
+    qp = top_k_per_group(
         e.where(
             F.col("vec_id") % _IVFPQ_NEW_MOD == _IVFPQ_NEW_REM
         )
@@ -4100,12 +3972,10 @@ def ivfpq_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "query_id", "v", "ccid", "ccv",
             f"{_SQD.format(a='v', b='ccv')} AS cd2",
-        )
-        .withColumn("prn", F.row_number().over(wq))
-        .where(F.col("prn") <= _IVFPQ_PROBE)
-        .selectExpr(
-            "query_id", "ccid", "zip_with(v, ccv, (x, c) -> x - c) AS qr"
-        )
+        ),
+        ["query_id"], ["cd2", "ccid"], _IVFPQ_PROBE,
+    ).selectExpr(
+        "query_id", "ccid", "zip_with(v, ccv, (x, c) -> x - c) AS qr"
     )
     qsub = qp.crossJoin(
         F.broadcast(spark.range(0, 4).selectExpr("id AS m"))
@@ -4129,14 +3999,6 @@ def ivfpq_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("adc")
         )
     )
-    wr = Window.partitionBy("query_id").orderBy("adc", "neighbor_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= 3)
-        .select(
-            "query_id",
-            F.col("rank").cast("bigint").alias("rank"),
-            "neighbor_id",
-            "adc",
-        )
-    )
+    return top_k_per_group(
+        adc, ["query_id"], ["adc", "neighbor_id"], 3, rank="rank"
+    ).select("query_id", F.col("rank").cast("bigint").alias("rank"), "neighbor_id", "adc")
