@@ -558,15 +558,16 @@ def test_drain_start_failure_leaves_session_unchanged(spark):
         blocker.stop()
 
 
-def test_file_streams_match_on_nanos_fixture(spark, sf_dir, tmp_path):
-    """The four availableNow file streams read a TIMESTAMP(NANOS) copy of
-    events (ts declared long, a branch no shipped fixture exercises) to the
-    same rows as the µs fixture, and leave nanosAsLong as they found it."""
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def _nanos_copy(spark, sf_dir, tmp_path):
+    """A directory holding a copy of ``sf_dir``'s events with ts stored as
+    TIMESTAMP(NANOS), a branch no shipped fixture exercises."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from uk_procurement_data_pipeline_spark.catalog import probe_events_nanos
-    from uk_procurement_data_pipeline_spark.queries import registry
 
     nanos_dir = tmp_path / "nanos"
     nanos_dir.mkdir()
@@ -580,9 +581,46 @@ def test_file_streams_match_on_nanos_fixture(spark, sf_dir, tmp_path):
         version="2.6",
     )
     assert probe_events_nanos(spark, str(nanos_dir / "events.parquet"))
+    return nanos_dir
 
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    before = spark.conf.get(key, None)
+
+def test_batch_events_match_on_nanos_fixture(spark, sf_dir, tmp_path):
+    """load_events and batch events queries read a TIMESTAMP(NANOS) copy of
+    events to the same rows and schema as the µs fixture, and leave
+    nanosAsLong as they found it."""
+    from collections import Counter
+
+    from uk_procurement_data_pipeline_spark.catalog import load
+    from uk_procurement_data_pipeline_spark.queries import registry
+
+    nanos_dir = str(_nanos_copy(spark, sf_dir, tmp_path))
+    before = spark.conf.get(_NANOS_AS_LONG, None)
+    reg = registry()
+    reads = {
+        name: reg[name].fn
+        for name in (
+            "events_tumbling_window",
+            "events_sliding_window",
+            "events_session_window",
+            "events_range_frame_sum",
+        )
+    }
+    reads["load_events"] = lambda spark, d: load(spark, d, "events")
+    for name, fn in reads.items():
+        want, got = fn(spark, sf_dir), fn(spark, nanos_dir)
+        assert got.schema == want.schema, name
+        assert Counter(got.collect()) == Counter(want.collect()), name
+    assert spark.conf.get(_NANOS_AS_LONG, None) == before
+
+
+def test_file_streams_match_on_nanos_fixture(spark, sf_dir, tmp_path):
+    """The four availableNow file streams read a TIMESTAMP(NANOS) copy of
+    events (ts declared long) to the same rows as the µs fixture, and
+    leave nanosAsLong as they found it."""
+    from uk_procurement_data_pipeline_spark.queries import registry
+
+    nanos_dir = _nanos_copy(spark, sf_dir, tmp_path)
+    before = spark.conf.get(_NANOS_AS_LONG, None)
     reg = registry()
     for name in (
         "stream_tumbling_counts",
@@ -593,7 +631,7 @@ def test_file_streams_match_on_nanos_fixture(spark, sf_dir, tmp_path):
         want = sorted(reg[name].fn(spark, sf_dir).collect())
         got = sorted(reg[name].fn(spark, str(nanos_dir)).collect())
         assert got == want, name
-        assert spark.conf.get(key, None) == before, name
+        assert spark.conf.get(_NANOS_AS_LONG, None) == before, name
 
 
 def _owners(path, match) -> set[str]:
@@ -648,8 +686,9 @@ def test_conf_and_drain_idioms_stay_in_their_helpers():
 
 def test_top_k_idioms_stay_in_their_helper():
     """A struct argmax (min/max over F.struct, min_by/max_by in any
-    spelling) lives in topk.top_k_per_group, and similarity.py keeps only
-    the row_number windows named here, each with its reason at the site."""
+    spelling) lives in topk.top_k_per_group, and similarity.py and
+    retrieval.py keep only the row_number windows named here, each with
+    its reason at the site."""
     import ast
     from pathlib import Path
 
@@ -679,4 +718,11 @@ def test_top_k_idioms_stay_in_their_helper():
     assert argmax_sites == {"topk.top_k_per_group", "dedup.golden_record_survivorship"}
     assert _owners(pkg / "queries" / "similarity.py", row_number) == {
         "similarity.opq_variance_balanced_pq",  # ranks the whole dim domain
+    }
+    assert _owners(pkg / "queries" / "retrieval.py", row_number) == {
+        "retrieval.zipf_exponent_fit",  # banded global rank
+        "retrieval.vocab_coverage_curve",  # banded global rank
+        "retrieval.rake_keyphrases",  # gaps-and-islands pos - row_number
+        "retrieval.mrr_retrieval_eval",  # first relevant rank can pass any k
+        "retrieval.loso_source_influence",  # measured faster than the k = 1 reduction
     }

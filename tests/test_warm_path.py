@@ -160,8 +160,8 @@ def test_fingerprints_immune_to_schema_memo_state():
 
 def test_parquet_reads_go_through_the_schema_memo():
     """Under the package, ``.read.parquet(`` is called only in catalog (the
-    memo reader, the nanos probe and the nanos load) and in the compaction
-    sink, which reads back the output it just wrote."""
+    memo reader and the nanos probe; the nanos read declares its schema)
+    and in the compaction sink, which reads back the output it just wrote."""
     import ast
     from pathlib import Path
 
@@ -182,6 +182,5 @@ def test_parquet_reads_go_through_the_schema_memo():
     assert sites == {
         "catalog.read_parquet",
         "catalog.probe_events_nanos",
-        "catalog.load_events",
         "sinks.compact_parquet",
     }

@@ -12,11 +12,12 @@ from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamReader
 from pyspark.sql.types import StructType
 
-from uk_procurement_data_pipeline_spark.session import scoped_conf
+from uk_procurement_data_pipeline_spark.streaming.events_stream import EVENTS_DDL
 
 TABLES = [
     "region",
@@ -101,7 +102,7 @@ _NANOS_PROBE_CACHE: dict[tuple[str, str], bool] = {}
 
 
 def probe_events_nanos(spark: SparkSession, path: str) -> bool:
-    """True iff ``path`` needs the nanos-as-long lowering (TIMESTAMP(NANOS)
+    """True iff ``path`` needs ``read_nanos_events`` (TIMESTAMP(NANOS)
     fixture). Any OTHER read failure — missing file, corrupt footer — is
     re-raised as itself rather than being misclassified as a nanos fixture
     and resurfacing later as a confusing secondary error. Shared by
@@ -127,26 +128,32 @@ def probe_events_nanos(spark: SparkSession, path: str) -> bool:
 
 
 def load_events(spark: SparkSession, path: str) -> DataFrame:
-    """Load an events parquet with ``ts`` normalized to a µs TIMESTAMP.
+    """Load an events parquet with ``ts`` normalized to a µs timestamp.
 
-    The fixture's ``ts`` physical type has varied across driver rounds:
-    TIMESTAMP(MICROS) reads natively; TIMESTAMP(NANOS) is rejected by
-    Spark's vectorized reader and needs the legacy nanos-as-long lowering
-    plus an explicit ns→µs truncate — exactly what DuckDB does when it
-    lowers ns to its µs TIMESTAMP (verified: …275999ns → …275µs), so both
-    engines see identical values either way. Try the native read first;
+    The fixture's ``ts`` physical type has varied across fixture versions:
+    TIMESTAMP(MICROS) reads natively (as timestamp_ntz: the fixture's ts
+    carries no time zone); TIMESTAMP(NANOS) is rejected by schema
+    inference and takes ``read_nanos_events``. Try the native read first;
     fall back to the nanos path only when schema resolution rejects it.
     """
     if not probe_events_nanos(spark, path):
         return read_parquet(spark, path)
-    # Legacy nanos fixture. The conf is dynamic (SQLConf); the parquet
-    # relation captures it during schema resolution, so force analysis with
-    # df.schema while it is set — no session-wide leak into unrelated
-    # nanos-parquet reads (ADVICE r01).
-    with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}):
-        df = spark.read.parquet(path)
-        df.schema  # force schema resolution while the conf is set
-    return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return read_nanos_events(spark.read, path, "timestamp_ntz")
+
+
+def read_nanos_events(
+    reader: DataFrameReader | DataStreamReader, path: str, ts_type: str
+) -> DataFrame:
+    """Batch or stream read of an events parquet whose ts is
+    TIMESTAMP(NANOS). ts is declared long, which Spark 4.1 reads from a
+    NANOS column without the nanosAsLong conf, truncated ns -> µs exactly
+    as DuckDB lowers ns to its µs TIMESTAMP (…275999ns -> …275µs), then
+    cast to ``ts_type``, the type a µs file's ts has on the same kind of
+    read. The session time zone is UTC, so the cast keeps every value."""
+    df = reader.schema(EVENTS_DDL.replace("ts timestamp", "ts long")).parquet(path)
+    return df.withColumn(
+        "ts", F.expr(f"CAST(timestamp_micros(ts div 1000) AS {ts_type})")
+    )
 
 
 def spread(df: DataFrame) -> DataFrame:

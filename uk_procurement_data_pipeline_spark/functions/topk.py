@@ -22,7 +22,13 @@ the plurality votes (sf0.1, 4 cores, 10 alternated fresh-process pairs,
 median and interquartile range): ``label_propagation_communities`` 2.50 s
 (0.34) against the window's 2.91 s (0.24), faster in 10 of 10 pairs;
 ``modularity_communities`` 6.00 s (0.40) against 6.48 s (0.94), 9 of 10.
-On ``hard_negatives_lsh`` the two tie (2.22 against 2.27 s).
+On ``hard_negatives_lsh`` the two tie (2.22 against 2.27 s). On
+retrieval's two keyed top-1 sites the window read faster (same setup,
+``bench.py``'s best-of-runs noop time, window against reduction):
+``naive_bayes_source_classifier`` 2.44 s (0.44) against 2.72 s (0.78), the
+reduction faster in 3 of 10 pairs and within the window's IQR, so it
+calls the helper; ``loso_source_influence`` 3.94 s (0.44) against 4.78 s
+(1.78), 3 of 10, beyond the IQR, so it keeps its window by hand.
 Spark's struct comparison puts a NULL field first and ``-x`` leaves NaN
 the largest value, so the key spells the contract out: an ``is null``
 field before each nullable term, and for a DESC term an ``is not NaN``

@@ -23,7 +23,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from uk_procurement_data_pipeline_spark.catalog import load, probe_events_nanos
+from uk_procurement_data_pipeline_spark.catalog import load, probe_events_nanos, read_nanos_events
 from uk_procurement_data_pipeline_spark.functions.exact import exact_sum, oracle_sum
 from uk_procurement_data_pipeline_spark.queries.base import register
 from uk_procurement_data_pipeline_spark.session import scoped_conf
@@ -179,17 +179,14 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File stream over ``sf_dir``'s events parquet.
 
     The fixture's ts has been TIMESTAMP(MICROS) or TIMESTAMP(NANOS) across
-    fixture versions. A nanos file is read with ts declared as long and
-    truncated ns -> µs exactly as ``catalog.load_events`` does; Spark 4.1
-    reads a NANOS column declared long without the nanosAsLong conf. The
-    probe re-raises non-nanos failures (missing or corrupt file).
+    fixture versions; a nanos file takes the same lowering as
+    ``catalog.load_events``. The probe re-raises non-nanos failures
+    (missing or corrupt file).
     """
-    nanos = probe_events_nanos(spark, f"{sf_dir}/events.parquet")
-    ddl = EVENTS_DDL.replace("ts timestamp", "ts long") if nanos else EVENTS_DDL
-    src = spark.readStream.schema(ddl).parquet(f"{sf_dir}/events*.parquet")
-    if not nanos:
-        return src
-    return src.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    path = f"{sf_dir}/events*.parquet"
+    if probe_events_nanos(spark, f"{sf_dir}/events.parquet"):
+        return read_nanos_events(spark.readStream, path, "timestamp")
+    return spark.readStream.schema(EVENTS_DDL).parquet(path)
 
 
 @register(

@@ -35,7 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from uk_procurement_data_pipeline_spark import indexes
 from uk_procurement_data_pipeline_spark.catalog import load
+from uk_procurement_data_pipeline_spark.functions.topk import top_k_per_group
 from uk_procurement_data_pipeline_spark.queries.base import register
 
 _TOP_K = 5
@@ -134,22 +136,24 @@ def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.avg(F.col("dl").cast("double")).alias("avgdl"),
     )
     qt = spark.createDataFrame(list(_QUERIES), "query_id string, term string")
-    scored = (
+    return _bm25_top_k(
         tf.join(F.broadcast(qt), "term")
         .join(dfreq, "term")
         .join(dl, "doc_id")
         .join(F.broadcast(corpus))
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.sum(F.expr(_BM25_MICRO)).alias("score_micro"),
-            F.count(F.lit(1)).alias("n_terms_hit"),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("doc_id")
+
+
+def _bm25_top_k(hits: DataFrame) -> DataFrame:
+    """The BM25 serving tail: each (query, doc)'s exact bigint score over
+    its matched-term rows ``hits`` (query_id, doc_id and _BM25_MICRO's
+    inputs), then each query's top-_TOP_K docs by (score DESC, doc_id)."""
+    scored = hits.groupBy("query_id", "doc_id").agg(
+        F.sum(F.expr(_BM25_MICRO)).alias("score_micro"),
+        F.count(F.lit(1)).alias("n_terms_hit"),
     )
-    return scored.withColumn("rnk", F.row_number().over(w)).where(
-        F.col("rnk") <= _TOP_K
+    return top_k_per_group(
+        scored, ["query_id"], ["score_micro DESC", "doc_id"], _TOP_K, rank="rnk"
     )
 
 
@@ -489,8 +493,6 @@ def bigram_surprisal_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def zipf_exponent_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     vocab = (
         load(spark, sf_dir, "documents")
         .select(F.explode(F.split("text", " ")).alias("word"))
@@ -499,10 +501,9 @@ def zipf_exponent_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Banded global rank: the band is the count value itself — rank within
     # each count (partitioned window), offset by the total size of all
-    # HIGHER counts (broadcast join on the bounded count domain).
-    in_band = F.row_number().over(
-        Window.partitionBy("c").orderBy("word")
-    )
+    # HIGHER counts (broadcast join on the bounded count domain). A window,
+    # not top_k_per_group: every word needs its rank.
+    in_band = F.row_number().over(Window.partitionBy("c").orderBy("word"))
     sizes = vocab.groupBy("c").agg(F.count(F.lit(1)).alias("bn"))
     hi = sizes.select(F.col("c").alias("hc"), F.col("bn").alias("hn"))
     offsets = (
@@ -577,8 +578,6 @@ _COV_TOPK = 64
     """,
 )
 def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     vocab = (
         load(spark, sf_dir, "documents")
         .select(F.explode(F.split("text", " ")).alias("word"))
@@ -586,6 +585,8 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
     tot = vocab.agg(F.sum("c").cast("bigint").alias("total"))
+    # A window, not top_k_per_group: the banded rank of every word feeds
+    # the global rank (as in zipf_exponent_fit).
     in_band_rank = F.row_number().over(Window.partitionBy("c").orderBy("word"))
     in_band_cum = F.sum("c").over(
         Window.partitionBy("c")
@@ -811,8 +812,8 @@ _NB_SCORE_CTES = """
     "source grid (two small aggregates cross-joined; at web scale "
     "you keep the sparse table plus a per-source default weight), "
     "log-prior plus per-token micro-ln weights summed as exact "
-    "bigints per (doc, source), argmax by (score desc, source) in a "
-    "doc-partitioned window. Reports each document's predicted vs "
+    "bigints per (doc, source), argmax by (score desc, source) per "
+    "doc (a keyed top-1). Reports each document's predicted vs "
     "true source — the self-classification confusion signal.",
     oracle="WITH" + _NB_SCORE_CTES + """,
         best AS (
@@ -829,16 +830,15 @@ _NB_SCORE_CTES = """
     """,
 )
 def naive_bayes_source_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     scores, truth = _nb_scores(spark, sf_dir)
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("score_micro"), "source"
+    best = top_k_per_group(
+        scores.select("doc_id", "source", "score_micro"),
+        ["doc_id"],
+        ["score_micro DESC", "source"],
+        1,
     )
     return (
-        scores.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .join(truth, "doc_id")
+        best.join(truth, "doc_id")
         .select(
             "doc_id",
             "true_source",
@@ -977,11 +977,11 @@ _MARGIN_BIN_MICRO = 250_000  # quarter-nat margin bins
 )
 def nb_margin_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores, truth = _nb_scores(spark, sf_dir)
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score_micro"), "source")
-    ranked = scores.withColumn("rn", F.row_number().over(w))
+    ranked = top_k_per_group(
+        scores, ["doc_id"], ["score_micro DESC", "source"], 2, rank="rn"
+    )
     top2 = (
-        ranked.where(F.col("rn") <= 2)
-        .groupBy("doc_id")
+        ranked.groupBy("doc_id")
         .agg(
             F.max(F.when(F.col("rn") == 1, F.col("score_micro"))).alias("s1"),
             F.max(F.when(F.col("rn") == 2, F.col("score_micro"))).alias("s2"),
@@ -1096,10 +1096,8 @@ def distinctive_terms_log_odds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(ng))
         .select("source", "term", "y", z_micro.alias("z_micro"))
     )
-    w = Window.partitionBy("source").orderBy(F.col("z_micro").desc(), "term")
     return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 5)
+        top_k_per_group(scored, ["source"], ["z_micro DESC", "term"], 5, rank="rk")
         .select("source", "term", F.col("y").alias("n_in_source"), "z_micro", "rk")
         .orderBy("source", "rk")
     )
@@ -1350,16 +1348,8 @@ def recommender_hitrate_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "co",
         )
     )
-    # Top-20 prune stays a row_number window: an aggregate-sliced top-k
-    # (collect_list + array_sort + slice) was measured as a wash end-to-end
-    # (3.81 vs 3.87 s interleaved best-of-4 at sf0.1) — ObjectHashAggregate
-    # falls back to sort-based past 128 groups per partition, so the
-    # "avoid the sort" rationale does not materialize. Negative result
-    # kept per OPTIMIZATION_r12.md.
-    wp = Window.partitionBy("p1").orderBy(F.col("co").desc(), "p2")
-    pruned = pairs.withColumn("rn", F.row_number().over(wp)).where(
-        F.col("rn") <= 20
-    ).drop("rn")
+    # An aggregate-sliced top-20 measured a wash (OPTIMIZATION_r12.md).
+    pruned = top_k_per_group(pairs, ["p1"], ["co DESC", "p2"], 20)
     cand = (
         cust_train.join(pruned, cust_train.part == pruned.p1)
         .select("cust", F.col("p2").alias("cpart"), "co")
@@ -1377,15 +1367,9 @@ def recommender_hitrate_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left_anti",
         )
     )
-    # Top-3 recs and the hit-rate eval keep their window + join form: the
-    # aggregate-sliced recs array + arrays_overlap eval measured 0.5 s
-    # SLOWER (3.37 vs 2.87 s) — same ObjectHashAggregate sort-based
-    # fallback as the prune. Negative result kept per OPTIMIZATION_r12.md.
-    wc = Window.partitionBy("cust").orderBy(F.col("score").desc(), "part")
-    recs = (
-        cand.withColumn("rn", F.row_number().over(wc))
-        .where(F.col("rn") <= 3)
-        .select("cust", "part")
+    # An aggregate-sliced recs array measured 0.5 s slower (OPTIMIZATION_r12.md).
+    recs = top_k_per_group(cand, ["cust"], ["score DESC", "part"], 3).select(
+        "cust", "part"
     )
     eval_cust = (
         recs.join(cust_test.select("cust").distinct(), "cust", "left_semi")
@@ -1485,6 +1469,8 @@ def rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orderBy+limit -> TakeOrderedAndProject: distributed top-20 even
     # over a web-scale vocabulary (no single-partition window sort).
     stop = uni.orderBy(F.col("n_w").desc(), "word").limit(20).select("word")
+    # A window, not top_k_per_group: gaps-and-islands, pos - row_number
+    # is constant along each run of consecutive non-stop words.
     nonstop = (
         pos.join(F.broadcast(stop), "word", "left_anti")
         .withColumn(
@@ -1718,8 +1704,6 @@ def vocab_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def loso_source_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load(spark, sf_dir, "documents")
     tf = (
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
@@ -1837,6 +1821,9 @@ def loso_source_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("score_micro"),
         )
     )
+    # A window, not top_k_per_group: its k = 1 reduction measured slower
+    # here (sf0.1, 4 cores, 10 alternated fresh-process pairs, median
+    # (IQR)): 4.78 s (1.78) against this window's 3.94 s (0.44).
     w = Window.partitionBy("doc_id").orderBy(F.desc("score_micro"), "lang")
     best = (
         scores.withColumn("rn", F.row_number().over(w))
@@ -2063,8 +2050,6 @@ _QUERY_VALUES_CAT = ", ".join(f"('{q}', '{t}')" for q, t in _QUERIES_CAT)
 
 def bm25_index_fingerprint(sf_dir: str) -> str:
     """Generation fingerprint for the stored BM25 postings index."""
-    from uk_procurement_data_pipeline_spark import indexes
-
     return indexes.fingerprint(
         tables={"documents": indexes.table_fingerprint(sf_dir, "documents")},
         params={"layout": "denorm_postings", "version": 1},
@@ -2128,8 +2113,6 @@ def bm25_index_fingerprint(sf_dir: str) -> str:
     """,
 )
 def bm25_index_catalog_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from uk_procurement_data_pipeline_spark import indexes
-
     fp = bm25_index_fingerprint(sf_dir)
 
     def build_postings() -> DataFrame:
@@ -2169,20 +2152,8 @@ def bm25_index_catalog_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qt = spark.createDataFrame(
         list(_QUERIES_CAT), "query_id string, term string"
     )
-    scored = (
-        post.join(F.broadcast(qt), "term")
-        .join(F.broadcast(corpus))
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.sum(F.expr(_BM25_MICRO)).alias("score_micro"),
-            F.count(F.lit(1)).alias("n_terms_hit"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("doc_id")
-    )
-    return scored.withColumn("rnk", F.row_number().over(w)).where(
-        F.col("rnk") <= _TOP_K
+    return _bm25_top_k(
+        post.join(F.broadcast(qt), "term").join(F.broadcast(corpus))
     )
 
 
@@ -2210,8 +2181,6 @@ def bm25_inc_fingerprint(sf_dir: str) -> str:
     generation stores NORMALIZED postings + a separate per-term df table
     + integer corpus totals, the layout that admits append-only
     maintenance."""
-    from uk_procurement_data_pipeline_spark import indexes
-
     return indexes.fingerprint(
         tables={"documents": indexes.table_fingerprint(sf_dir, "documents")},
         params={
@@ -2286,8 +2255,6 @@ def bm25_inc_fingerprint(sf_dir: str) -> str:
     """,
 )
 def bm25_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from uk_procurement_data_pipeline_spark import indexes
-
     fp = bm25_inc_fingerprint(sf_dir)
 
     def _postings_of(docs: DataFrame) -> DataFrame:
@@ -2370,20 +2337,8 @@ def bm25_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         list(_QUERIES_INC), "query_id string, term string"
     )
     qdf = termdf.join(F.broadcast(qt), "term")  # df for query terms only
-    scored = (
-        post.join(F.broadcast(qdf), "term")
-        .join(F.broadcast(corpus))
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.sum(F.expr(_BM25_MICRO)).alias("score_micro"),
-            F.count(F.lit(1)).cast("bigint").alias("n_terms_hit"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("doc_id")
-    )
-    return scored.withColumn("rnk", F.row_number().over(w)).where(
-        F.col("rnk") <= _TOP_K
+    return _bm25_top_k(
+        post.join(F.broadcast(qdf), "term").join(F.broadcast(corpus))
     )
 
 
@@ -2555,8 +2510,6 @@ def kneser_ney_bigram_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mrr_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load(spark, sf_dir, "documents")
     # r12 optimization (guide §2.3 aggregate/filter before you shuffle):
     # the old plan built the FULL (doc, term) tf table three times (tf,
@@ -2599,6 +2552,8 @@ def mrr_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_distinct("term").cast("bigint").alias("n_matched"),
         )
     )
+    # A window, not top_k_per_group: every hit is ranked, because the
+    # first relevant rank can fall past any k.
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_micro").desc(), F.col("doc_id")
     )
