@@ -520,10 +520,71 @@ def test_offset_pos_shapes(end_offset, want):
     assert _offset_pos(end_offset) == want
 
 
+_CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def test_drain_checkpoints_through_the_file_system_manager(
+    spark, stream_src, monkeypatch
+):
+    """While a drain runs, its checkpoint goes through Spark's FileSystem
+    checkpoint manager (no readlink fork per rename); afterwards the
+    session's setting is back."""
+    import tempfile
+
+    from uk_procurement_data_pipeline_spark.queries import events
+
+    seen, real_mkdtemp = [], tempfile.mkdtemp
+
+    def mkdtemp(**kw):
+        seen.append(spark.conf.get(_CKPT_MANAGER, None))
+        return real_mkdtemp(**kw)
+
+    monkeypatch.setattr(events.tempfile, "mkdtemp", mkdtemp)
+    before = spark.conf.get(_CKPT_MANAGER, None)
+    src = _read_all(spark, stream_src)
+    out = events._drain(src, "drain_manager_probe", "append")
+    assert out.count() == spark.read.parquet(str(stream_src / "day*")).count()
+    assert seen == [events._DRAIN_CONFS[_CKPT_MANAGER]]
+    assert seen[0].endswith(".FileSystemBasedCheckpointFileManager")
+    assert spark.conf.get(_CKPT_MANAGER, None) == before
+
+
+def test_file_system_manager_writes_the_same_checkpoint_files(
+    spark, stream_src, tmp_path
+):
+    """A dedup stream checkpointed under Spark's default manager and under
+    the FileSystem one leaves the same files (temp names aside), so the
+    Hadoop .crc files and the checkpoint checksum files are still there."""
+    from uk_procurement_data_pipeline_spark.queries.events import _DRAIN_CONFS
+    from uk_procurement_data_pipeline_spark.session import scoped_conf
+
+    def checkpoint_files(name, confs):
+        ckpt = tmp_path / name / "ckpt"
+        with scoped_conf(spark, confs):
+            run_available_now(
+                stream_dedup(_read_all(spark, stream_src)),
+                str(tmp_path / name / "out"),
+                str(ckpt),
+            )
+        return {
+            str(p.relative_to(ckpt))
+            for p in ckpt.rglob("*")
+            if p.is_file() and ".tmp" not in p.name
+        }
+
+    default = checkpoint_files("default", {})
+    fs = checkpoint_files("fs", {_CKPT_MANAGER: _DRAIN_CONFS[_CKPT_MANAGER]})
+    assert fs == default
+    names = {n.rsplit("/", 1)[-1] for n in fs}
+    assert ".1.delta.crc" in names  # Hadoop's checksum of a state file
+    assert "1.delta.crc" in names  # Spark's checkpoint file checksum
+
+
 def test_drain_start_failure_leaves_session_unchanged(spark):
     """start() fails because a query named qname is already active: the
-    shuffle width and state-store provider are restored, no new query is
-    left running and the checkpoint dir is removed."""
+    shuffle width, checkpoint manager and state-store provider are
+    restored, no new query is left running and the checkpoint dir is
+    removed."""
     import glob
     import tempfile
 
@@ -544,6 +605,7 @@ def test_drain_start_failure_leaves_session_unchanged(spark):
     )
     try:
         width = spark.conf.get("spark.sql.shuffle.partitions")
+        manager = spark.conf.get(_CKPT_MANAGER, None)
         provider = spark.conf.get(_PROVIDER, None)
         active = {q.id for q in spark.streams.active}
         dirs = ckpt_dirs()
@@ -551,6 +613,7 @@ def test_drain_start_failure_leaves_session_unchanged(spark):
         with pytest.raises(Exception, match=qname):
             _drain(src, qname, "append", rows=10, confs={_PROVIDER: _ROCKSDB})
         assert spark.conf.get("spark.sql.shuffle.partitions") == width
+        assert spark.conf.get(_CKPT_MANAGER, None) == manager
         assert spark.conf.get(_PROVIDER, None) == provider
         assert {q.id for q in spark.streams.active} == active
         assert ckpt_dirs() == dirs
@@ -682,6 +745,24 @@ def test_conf_and_drain_idioms_stay_in_their_helpers():
         *(_owners(p, drain_plumbing) for p in (pkg / "queries").glob("*.py"))
     )
     assert drain_sites == {"events._drain"}
+
+
+def test_constant_tables_stay_in_their_helper():
+    """Under the package, a constant table is catalog.local_table: no
+    other code calls ``createDataFrame(`` or ``parallelize(``, whose
+    classic form is a PythonRDD that runs a Python-worker job per use."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "uk_procurement_data_pipeline_spark"
+
+    def python_rdd(n):
+        return isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and (
+            n.func.attr in ("createDataFrame", "parallelize")
+        )
+
+    sites = set().union(*(_owners(p, python_rdd) for p in pkg.rglob("*.py")))
+    assert sites <= {"catalog.local_table"}
 
 
 def test_top_k_idioms_stay_in_their_helper():

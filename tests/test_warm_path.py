@@ -55,11 +55,79 @@ def test_second_load_runs_no_job_and_matches_plain_read(spark, sf_dir, table):
 
 
 def test_first_events_load_infers_once(spark, sf_dir, tmp_path):
-    """The nanos probe's schema inference serves the native load too."""
+    """The nanos probe reads the footer, so the native load's schema
+    inference is the one job."""
     shutil.copy(f"{sf_dir}/events.parquet", tmp_path / "events.parquet")
     df, jobs = _jobs(spark, lambda: catalog.load(spark, str(tmp_path), "events"))
     assert jobs == 1
     assert df.schema == spark.read.parquet(f"{sf_dir}/events.parquet").schema
+
+
+def test_nanos_probe_reads_the_footer_without_a_job(spark, sf_dir, tmp_path):
+    """A TIMESTAMP(NANOS) file is told apart by its footer's logical type:
+    no Spark job, so no failed task and no ERROR stack. INT96, which
+    pyarrow also reads as timestamp[ns], is a µs read for Spark."""
+    from test_streaming import _nanos_copy
+
+    nanos_dir, jobs = _jobs(spark, lambda: _nanos_copy(spark, sf_dir, tmp_path))
+    assert jobs == 0
+    int96 = tmp_path / "int96.parquet"
+    pq.write_table(
+        pq.read_table(nanos_dir / "events.parquet"),
+        int96,
+        use_deprecated_int96_timestamps=True,
+    )
+    nanos, jobs = _jobs(spark, lambda: catalog.probe_events_nanos(spark, str(int96)))
+    assert (nanos, jobs) == (False, 0)
+
+
+def test_nanos_probe_falls_back_to_spark_off_a_footer(spark, sf_dir, tmp_path):
+    """A directory of parts takes Spark's schema inference, and a missing
+    path raises as a plain read does, even when its name says nanos."""
+    parts = tmp_path / "parts"
+    parts.mkdir()
+    shutil.copy(f"{sf_dir}/events.parquet", parts / "part-0.parquet")
+    nanos, jobs = _jobs(spark, lambda: catalog.probe_events_nanos(spark, str(parts)))
+    assert (nanos, jobs) == (False, 1)
+    missing = str(tmp_path / "nanos" / "events.parquet")
+    with pytest.raises(Exception) as plain:
+        spark.read.parquet(missing)
+    with pytest.raises(Exception) as probe:
+        catalog.probe_events_nanos(spark, missing)
+    assert type(probe.value) is type(plain.value)
+
+
+def test_local_table_is_a_local_relation(spark):
+    """catalog.local_table: the DDL's names and types, every column
+    nullable, the rows as given (None as NULL), an empty case, and a
+    LocalRelation plan whose collect runs no job."""
+    from datetime import datetime
+    from decimal import Decimal
+
+    from pyspark.sql.types import StructField, StructType, _parse_datatype_string
+
+    ddl = "q string, `n b` int, big bigint, d double, dec decimal(10,2), ts timestamp_ntz"
+    rows = [
+        ("it's ${x}\\", 1, 2**40, 0.1, Decimal("1.25"), "2020-01-02 03:04:05"),
+        (None, None, None, float("inf"), None, None),
+    ]
+    df = catalog.local_table(spark, rows, ddl)
+    want = StructType(
+        [StructField(f.name, f.dataType, True) for f in _parse_datatype_string(ddl)]
+    )
+    assert df.schema == want
+    got, jobs = _jobs(spark, df.collect)
+    assert jobs == 0
+    assert [tuple(r) for r in got] == [
+        rows[0][:5] + (datetime(2020, 1, 2, 3, 4, 5),),
+        rows[1],
+    ]
+    assert df._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+
+    empty = catalog.local_table(spark, [], want)
+    assert empty.schema == want
+    assert _jobs(spark, empty.collect) == ([], 0)
+    assert empty._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
 
 
 def test_rewritten_file_is_reinferred(spark, tmp_path):
@@ -159,9 +227,9 @@ def test_fingerprints_immune_to_schema_memo_state():
 
 
 def test_parquet_reads_go_through_the_schema_memo():
-    """Under the package, ``.read.parquet(`` is called only in catalog (the
-    memo reader and the nanos probe; the nanos read declares its schema)
-    and in the compaction sink, which reads back the output it just wrote."""
+    """Under the package, ``.read.parquet(`` is called only in catalog's
+    memo reader (the nanos read declares its schema) and in the compaction
+    sink, which reads back the output it just wrote."""
     import ast
     from pathlib import Path
 
@@ -179,8 +247,4 @@ def test_parquet_reads_go_through_the_schema_memo():
         )
 
     sites = set().union(*(_owners(p, parquet_read) for p in pkg.rglob("*.py")))
-    assert sites == {
-        "catalog.read_parquet",
-        "catalog.probe_events_nanos",
-        "sinks.compact_parquet",
-    }
+    assert sites == {"catalog.read_parquet", "sinks.compact_parquet"}

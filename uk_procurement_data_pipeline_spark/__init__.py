@@ -2,12 +2,11 @@
 qmanhbeo/uk-procurement-data-pipeline, re-expressed Spark-first.
 
 Layout:
-  session    — SparkSession factory (AQE, UTC, Arrow)
-  catalog    — fixture-table loaders (TESTDATA.md parquet)
-  functions/ — scalar/array/date helpers mirroring reference semantics
-  operators/ — relational / dedup / similarity / text / as-of operators
-  sources/   — ingestion adapters (zip-of-XML, CSV, HTTP-stub, parquet IO)
-  plans/     — end-to-end dataflows (OCDS flatten, FaT flatten, merge, scrape)
+  session    — SparkSession factory (AQE, UTC, Arrow) and scoped confs
+  catalog    — fixture-table loaders (TESTDATA.md parquet), constant tables
+  indexes    — fingerprint-addressed index generations (build once, probe)
+  functions/ — shared Catalyst helpers: exact sums, top-k, graph, codecs
+  sources/   — ingestion adapters (zip-of-XML, CSV, Excel, HTTP-stub, sinks)
   streaming/ — Structured Streaming windows / dedup / incremental ingest
   queries/   — the driver-facing query registry (queries() + oracle_sql())
 """

@@ -5,17 +5,19 @@ factor's directory. Every parquet read goes through ``read_parquet``: a
 file's schema is inferred from its footer once per Spark application and
 file state (each file's name, size and mtime_ns), and every later read of
 the same state reuses it without a Spark job. A file that changes is
-re-inferred on its next read.
+re-inferred on its next read. Constant tables are ``local_table``s.
 """
 
 from __future__ import annotations
 
+import json
+from collections.abc import Iterable, Sequence
 from pathlib import Path
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamReader
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 from uk_procurement_data_pipeline_spark.streaming.events_stream import EVENTS_DDL
 
@@ -31,12 +33,6 @@ TABLES = [
     "documents",
     "embeddings",
 ]
-
-# Fixed-cardinality dimensions that are always safe to broadcast (SURVEY.md
-# §2.3 J5). customer/part/supplier grow with SF and must NOT be force-broadcast
-# — at the 100 TB design point they are tens of GB; AQE picks their strategy.
-BROADCAST_TABLES = {"region", "nation"}
-
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table from an sf directory."""
@@ -94,35 +90,46 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-# (applicationId, path) -> needs-nanos-lowering. The probe resolves the
-# parquet footer schema through the JVM (~1s per call — measured), and every
-# events query pays it once per load(); the physical type of a given fixture
-# file never changes within a session, so memoize per Spark application.
+# (applicationId, path) -> needs-nanos-lowering: a fixture file's physical
+# type never changes within a session, so later events queries reuse it.
 _NANOS_PROBE_CACHE: dict[tuple[str, str], bool] = {}
+
+
+def _footer_has_nanos(path: str) -> bool | None:
+    """Whether the parquet footer of ``path`` declares a TIMESTAMP(NANOS)
+    logical type, or None when ``path`` is no readable parquet file (a
+    directory of parts, a missing or corrupt file). Not the Arrow type:
+    pyarrow maps INT96, which Spark reads natively, to timestamp[ns] too."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        schema = pq.read_metadata(path).schema
+    except (OSError, pa.ArrowException):
+        return None
+    units = (json.loads(c.logical_type.to_json()).get("timeUnit") for c in schema)
+    return "nanoseconds" in units
 
 
 def probe_events_nanos(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` needs ``read_nanos_events`` (TIMESTAMP(NANOS)
-    fixture). Any OTHER read failure — missing file, corrupt footer — is
-    re-raised as itself rather than being misclassified as a nanos fixture
-    and resurfacing later as a confusing secondary error. Shared by
-    ``load_events`` and the streaming queries so the message filter lives
-    in exactly one place. Memoized per (application, path)."""
+    fixture). A local file's footer answers without a Spark job. Any other
+    path takes Spark's schema inference, which rejects a nanos column; any
+    OTHER failure there (missing file, corrupt footer) is re-raised as
+    itself rather than misread as a nanos fixture. Shared by ``load_events``
+    and the streaming queries. Memoized per (application, path)."""
     key = (spark.sparkContext.applicationId, path)
     if key in _NANOS_PROBE_CACHE:
         return _NANOS_PROBE_CACHE[key]
-    schema_key = _schema_key(spark, path)
-    try:
-        schema = spark.read.parquet(path).schema  # force schema resolution
-        result = False
-    except Exception as exc:  # noqa: BLE001 — filtered by message
-        if "NANOS" not in str(exc) and "nanos" not in str(exc):
-            raise
-        result = True
-    else:
-        # The native load that follows reuses this inference.
-        if schema_key is not None:
-            _SCHEMA_CACHE[schema_key] = schema
+    result = _footer_has_nanos(path)
+    if result is None:
+        try:
+            read_parquet(spark, path)  # memoizes the schema for the load
+            result = False
+        except Exception as exc:  # noqa: BLE001 — filtered by message
+            if "TIMESTAMP(NANOS" not in str(exc):  # the type, not a path
+                raise
+            result = True
     _NANOS_PROBE_CACHE[key] = result
     return result
 
@@ -170,7 +177,35 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(sc.defaultParallelism)
 
 
-def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:
-    """Register fixture tables as temp views (for spark.sql-based queries)."""
-    for name in tables or TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
+def _sql_text(value) -> str:
+    """``str(value)`` as a SQL string: a UTF-8 binary literal needs no
+    quoting and takes no ``${}`` substitution. None is NULL."""
+    if value is None:
+        return "NULL"
+    return f"CAST(X'{str(value).encode().hex()}' AS STRING)"
+
+
+def local_table(
+    spark: SparkSession, rows: Iterable[Sequence], ddl: str | StructType
+) -> DataFrame:
+    """A constant table of ``rows`` with the schema ``ddl``, planned as a
+    JVM ``LocalRelation``: collecting it runs no job, and broadcasting it
+    runs a JVM-only one.
+
+    Classic ``spark.createDataFrame(list, ddl)`` is ``sc.parallelize``, a
+    PythonRDD, so each use runs tasks that wait on Python workers (the
+    first one forks the worker daemon). This is a ``VALUES`` list.
+    Each value goes in as ``str(value)`` and is cast to its column's type
+    (``simpleString()``), so numbers, NaN, booleans, dates, timestamps and
+    decimals all work. Every column is nullable, as with
+    ``createDataFrame``: a trailing all-NULL row makes it so and the LIMIT
+    drops that row again.
+    """
+    schema = ddl if isinstance(ddl, StructType) else _parse_datatype_string(ddl)
+    rows = [*map(tuple, rows), (None,) * len(schema.fields)]
+    values = ", ".join(f"({', '.join(map(_sql_text, r))})" for r in rows)
+    cols = ", ".join(
+        f"CAST(col{i} AS {f.dataType.simpleString()}) AS `{f.name.replace('`', '``')}`"
+        for i, f in enumerate(schema.fields, 1)
+    )
+    return spark.sql(f"SELECT {cols} FROM VALUES {values} LIMIT {len(rows) - 1}")

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (parity with siblings)
 
-from uk_procurement_data_pipeline_spark.catalog import load
+from uk_procurement_data_pipeline_spark.catalog import load, local_table
 from uk_procurement_data_pipeline_spark.queries.base import register
 
 _TOKENS = "split(text, ' ')"  # Spark tokens
@@ -1823,9 +1823,7 @@ _PREFIX_DEPTHS = [1, 2, 4, 8, 16]  # prefix-cache probe depths (tokens)
     """,
 )
 def prefix_cache_hit_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    depths = spark.createDataFrame(
-        [(d,) for d in _PREFIX_DEPTHS], "depth int"
-    )
+    depths = local_table(spark, [(d,) for d in _PREFIX_DEPTHS], "depth int")
     return (
         load(spark, sf_dir, "documents")
         .selectExpr("doc_id", f"{_TOKENS} AS toks")

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from uk_procurement_data_pipeline_spark.catalog import load, spread
+from uk_procurement_data_pipeline_spark.catalog import load, local_table, spread
 from uk_procurement_data_pipeline_spark.queries.base import register
 
 # --- shared expression fragments (Spark SQL / DuckDB SQL) -------------------
@@ -1379,8 +1379,8 @@ def minhash_band_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     sg = d.selectExpr("doc_id", "sh", f"{_HS} AS hs").selectExpr(
         "doc_id", f"{_SIG} AS sig"
     )
-    cfgs = spark.createDataFrame(
-        _TUNE_CFGS, "config_id int, n_bands int, rows_per_band int"
+    cfgs = local_table(
+        spark, _TUNE_CFGS, "config_id int, n_bands int, rows_per_band int"
     )
     bands = (
         sg.crossJoin(F.broadcast(cfgs))

@@ -24,7 +24,7 @@ import pandas as pd  # noqa: F401 — resolved by pandas_udf type hints
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from uk_procurement_data_pipeline_spark.catalog import load
+from uk_procurement_data_pipeline_spark.catalog import load, local_table
 from uk_procurement_data_pipeline_spark.queries.base import register
 
 _CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
@@ -608,8 +608,8 @@ _DIRICHLET_MICRO = (
     """,
 )
 def lm_dirichlet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    terms = spark.createDataFrame(
-        [("join",), ("hash",), ("window",), ("stream",)], ["term"]
+    terms = local_table(
+        spark, [("join",), ("hash",), ("window",), ("stream",)], "term string"
     )
     tok = (
         load(spark, sf_dir, "documents")
@@ -1363,9 +1363,6 @@ def bpe_merge_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # quantized (not cents) so sum-of-squares stays under 2^53 through sf1
 # (1e5^2 x 6e6 rows ~ 6e16 needs bigint, double cast of the SUM is exact
 # only to 2^53 — dollars give 1e10 x 6e6 = 6e16... see doc).
-_MD2 = (
-    "((vyy * dx - vxy * dy) * dx + (vxx * dy - vxy * dx) * dy) / det"
-)
 
 
 @register(

@@ -23,7 +23,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from uk_procurement_data_pipeline_spark.catalog import load, probe_events_nanos, read_nanos_events
+from uk_procurement_data_pipeline_spark.catalog import (
+    load, local_table, probe_events_nanos, read_nanos_events,
+)
 from uk_procurement_data_pipeline_spark.functions.exact import exact_sum, oracle_sum
 from uk_procurement_data_pipeline_spark.queries.base import register
 from uk_procurement_data_pipeline_spark.session import scoped_conf
@@ -88,6 +90,13 @@ def _offset_pos(eo) -> int:
     return -1
 
 
+_DRAIN_CONFS = {
+    "spark.sql.shuffle.partitions": "8",
+    "spark.sql.streaming.checkpointFileManagerClass": "org.apache.spark.sql."
+    "execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+}
+
+
 def _drain(
     df: DataFrame,
     qname: str,
@@ -108,6 +117,14 @@ def _drain(
     latency is commit IO at these sizes. A fresh dir per run keeps a replay
     deterministic (a stale checkpoint would resume offsets and skip data).
 
+    The checkpoint is written through Spark's ``FileSystem`` manager, not
+    the default ``FileContext`` one: the latter's rename asks Hadoop's local
+    file system for the link status, which without the native libhadoop
+    forks a ``readlink`` per file (about 180 per drain at ~5 ms each). The
+    ``FileSystem`` manager renames with ``File.renameTo`` and writes the
+    same ``.crc`` and checkpoint checksum files. What it leaves is one
+    ``chmod`` fork per created file, which also only libhadoop avoids.
+
     ``rows=None`` drains a file source with ``trigger(availableNow)``.
     Otherwise the source is a Python stream reader, whose simple-reader
     wrapper only snapshots the next prefetched slice under availableNow,
@@ -120,7 +137,7 @@ def _drain(
     """
     spark = df.sparkSession
     ckpt_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8", **(confs or {})}):
+    with scoped_conf(spark, {**_DRAIN_CONFS, **(confs or {})}):
         ckpt = tempfile.mkdtemp(prefix=f"{qname}_ckpt_", dir=ckpt_root)
         q = None
         try:
@@ -3787,7 +3804,8 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_t = raw_t.groupBy("prev", "next").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-    scen = spark.createDataFrame(
+    scen = local_table(
+        spark,
         [("base", None)] + [(c, c) for c in _MRE_CHANNELS],
         "scenario string, removed string",
     )
@@ -4455,7 +4473,8 @@ def shapley_channel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("v_micro")
         )
     )
-    chan = spark.createDataFrame(
+    chan = local_table(
+        spark,
         [("click", 1), ("error", 2), ("signup", 4), ("view", 8)],
         "channel string, bit bigint",
     )

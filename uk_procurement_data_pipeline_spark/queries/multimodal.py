@@ -28,11 +28,6 @@ from pyspark.sql import functions as F  # noqa: F401
 from uk_procurement_data_pipeline_spark.catalog import load, spread
 from uk_procurement_data_pipeline_spark.queries.base import register
 
-# binary payload + typed metadata (media_type/format tagged at ingest)
-ASSET_DDL = (
-    "doc_id bigint, payload binary, media_type string, fmt string, n_bytes bigint"
-)
-
 FEATURE_SCHEMA = "doc_id bigint, n_bytes bigint, byte_hist array<bigint>"
 _HIST_BUCKETS = 8
 
@@ -894,7 +889,6 @@ def audio_feature_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # equi-join, clip-level agreement count. Never all-pairs.
 _VID_MOD, _VID_REM = 13, 4  # corpus sample: doc_id % 13 == 4
 _VID_ARCHS = 21  # archetype count
-_VID_MAXF = 6  # nframes = 4 + arch % 3 in {4, 5, 6}
 
 
 def _vid_frame_pixels(doc_id: int, f: int) -> tuple[int, int, list[int]]:

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from uk_procurement_data_pipeline_spark.catalog import load
+from uk_procurement_data_pipeline_spark.catalog import load, local_table
 from uk_procurement_data_pipeline_spark.functions.exact import (
     dec,
     exact_avg,
@@ -3298,13 +3298,8 @@ def zone_map_prune_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    bands = spark.createDataFrame(
-        [(b, f"{lo} 00:00:00", f"{hi} 00:00:00") for b, lo, hi in _ZM_BANDS],
-        "band_id int, b_lo string, b_hi string",
-    ).select(
-        "band_id",
-        F.col("b_lo").cast("timestamp").alias("b_lo"),
-        F.col("b_hi").cast("timestamp").alias("b_hi"),
+    bands = local_table(
+        spark, _ZM_BANDS, "band_id int, b_lo timestamp, b_hi timestamp"
     )
     exact = (
         li.join(

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from uk_procurement_data_pipeline_spark import indexes
-from uk_procurement_data_pipeline_spark.catalog import load
+from uk_procurement_data_pipeline_spark.catalog import load, local_table
 from uk_procurement_data_pipeline_spark.functions.topk import top_k_per_group
 from uk_procurement_data_pipeline_spark.queries.base import register
 
@@ -135,7 +135,7 @@ def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.avg(F.col("dl").cast("double")).alias("avgdl"),
     )
-    qt = spark.createDataFrame(list(_QUERIES), "query_id string, term string")
+    qt = local_table(spark, _QUERIES, "query_id string, term string")
     return _bm25_top_k(
         tf.join(F.broadcast(qt), "term")
         .join(dfreq, "term")
@@ -2149,9 +2149,7 @@ def bm25_index_catalog_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = indexes.build_or_load(
         spark, "bm25_corpus_stats", fp, build_stats
     )
-    qt = spark.createDataFrame(
-        list(_QUERIES_CAT), "query_id string, term string"
-    )
+    qt = local_table(spark, _QUERIES_CAT, "query_id string, term string")
     return _bm25_top_k(
         post.join(F.broadcast(qt), "term").join(F.broadcast(corpus))
     )
@@ -2333,9 +2331,7 @@ def bm25_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    qt = spark.createDataFrame(
-        list(_QUERIES_INC), "query_id string, term string"
-    )
+    qt = local_table(spark, _QUERIES_INC, "query_id string, term string")
     qdf = termdf.join(F.broadcast(qt), "term")  # df for query terms only
     return _bm25_top_k(
         post.join(F.broadcast(qdf), "term").join(F.broadcast(corpus))
@@ -2529,7 +2525,7 @@ def mrr_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("dl").cast("double") / F.count(F.lit(1)).cast("double")
         ).alias("avgdl"),
     )
-    qt = spark.createDataFrame(list(_QUERIES), "query_id string, term string")
+    qt = local_table(spark, _QUERIES, "query_id string, term string")
     qn = qt.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_terms")
     )

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from uk_procurement_data_pipeline_spark.catalog import load
+from uk_procurement_data_pipeline_spark.catalog import load, local_table
 from uk_procurement_data_pipeline_spark.functions.exact import oracle_sum
 from uk_procurement_data_pipeline_spark.functions.topk import top_k_per_group
 from uk_procurement_data_pipeline_spark.queries.base import register
@@ -2521,7 +2521,7 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         ["query_id"], ["d2", "neighbor_id"], 5,
     ).select("query_id", "neighbor_id")
-    sls = spark.createDataFrame([(s,) for s in _PQR_SLS], "sl int")
+    sls = local_table(spark, [(s,) for s in _PQR_SLS], "sl int")
     return (
         exact.crossJoin(F.broadcast(sls))
         .join(
@@ -3853,9 +3853,7 @@ def ivfpq_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("adc")
         )
     )
-    nps = spark.createDataFrame(
-        [(n,) for n in _IVFPQ_NPROBES], "nprobe int"
-    )
+    nps = local_table(spark, [(n,) for n in _IVFPQ_NPROBES], "nprobe int")
     ranked = top_k_per_group(
         adc.join(F.broadcast(nps), F.col("cell_prn") <= F.col("nprobe")),
         ["query_id", "nprobe"], ["adc", "neighbor_id"], 5,

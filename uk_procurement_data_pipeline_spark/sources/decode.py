@@ -2,18 +2,12 @@
 
 The reference decodes XML bytes utf-8-first with a latin-1 ``replace``
 fallback (2b_extract_find_a_tender_XMLs.py:479-482). Spark's built-in
-``decode(col, 'utf-8')`` cannot express the fallback, so this is one of
-the engine's few genuine scalar UDFs — Arrow-batched via pandas_udf, and
-only ever used inside ingest stages (never in the relational hot path).
+``decode(col, 'utf-8')`` cannot express the fallback, so the zip-of-XML
+sources call ``try_decode_bytes`` inside their Python parsers (ingest
+stages only, never the relational hot path).
 """
 
 from __future__ import annotations
-
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 UTF8 = "utf-8"
 FALLBACK = "latin-1"
@@ -27,19 +21,3 @@ def try_decode_bytes(raw: bytes | None) -> tuple[str | None, str | None]:
         return raw.decode(UTF8), UTF8
     except UnicodeDecodeError:
         return raw.decode(FALLBACK, errors="replace"), FALLBACK
-
-
-@pandas_udf(StringType())
-def try_decode(raw: pd.Series) -> pd.Series:
-    return raw.map(lambda b: try_decode_bytes(b)[0])
-
-
-@pandas_udf(StringType())
-def decode_encoding_used(raw: pd.Series) -> pd.Series:
-    """Which encoding decoded each value — a lineage/quality column (E4)."""
-    return raw.map(lambda b: try_decode_bytes(b)[1])
-
-
-def decoded_text(col: str | Column) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return try_decode(c)

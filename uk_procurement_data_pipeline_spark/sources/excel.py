@@ -221,16 +221,6 @@ def read_excel_stdlib(
     return files.select("path", "content").mapInPandas(parse, out_schema)
 
 
-def read_excel_merged(
-    spark: SparkSession, path_glob: str, columns: list[str]
-) -> DataFrame:
-    """The reference's merge loop (3_merge_to_two.py:41-57): read every
-    daily workbook under a glob and append into one frame — here a single
-    distributed scan instead of a driver-side concat, with per-file
-    lineage already attached."""
-    return read_excel_stdlib(spark, path_glob, columns)
-
-
 # ---------------------------------------------------------------------------
 # Jar-free .xlsx WRITER (S7 fidelity: the reference WRITES daily workbooks
 # via to_excel — 2a:654, 2b:498). Minimal SpreadsheetML: one sheet, every

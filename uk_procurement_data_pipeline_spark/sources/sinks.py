@@ -17,6 +17,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from uk_procurement_data_pipeline_spark.catalog import local_table
+
 
 def write_partitioned_parquet(
     df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
@@ -259,15 +261,14 @@ def acid_read(spark, table_dir: str, version: int | None = None) -> DataFrame:
     paths = [str(Path(table_dir) / rel) for rel in manifest["buckets"].values()]
     if not paths:
         # Empty snapshot (e.g. acid_create(df.limit(0))): reconstruct the
-        # zero-row frame from the recorded schema instead of erroring.
+        # zero-row frame from the recorded schema instead of erroring. Its
+        # columns are nullable, as a parquet read of a non-empty one is.
         schema_json = manifest.get("schema")
         if schema_json is None:  # pre-schema manifest, nothing to go on
             raise ValueError(f"snapshot v{v} of {table_dir} is empty")
         from pyspark.sql.types import StructType
 
-        return spark.createDataFrame(
-            [], StructType.fromJson(_json.loads(schema_json))
-        )
+        return local_table(spark, [], StructType.fromJson(_json.loads(schema_json)))
     # mergeSchema: after a schema-evolving MERGE, untouched buckets still
     # hold the old column set — the union of footers is the table schema,
     # with NULLs where a file predates a column (Delta's read semantics).
