@@ -163,8 +163,8 @@ def test_two_stage_pq_maxsim_prunes_and_agrees(spark, sf_dir):
     late_interaction-style brute-force score for that pair."""
     from pyspark.sql import functions as F
 
+    from uk_procurement_data_pipeline_spark.functions.vec import dot
     from uk_procurement_data_pipeline_spark.queries.base import registry
-    from uk_procurement_data_pipeline_spark.queries.similarity import _DOT
 
     rows = registry()["two_stage_pq_maxsim"].fn(spark, sf_dir).collect()
     assert rows
@@ -184,7 +184,7 @@ def test_two_stage_pq_maxsim_prunes_and_agrees(spark, sf_dir):
         .where("doc_id != query_id")
         .selectExpr(
             "query_id", "doc_id", "q_tok",
-            f"CAST(floor({_DOT.format(a='qe', b='embedding')}"
+            f"CAST(floor({dot('qe', 'embedding')}"
             " * 1000000 + 0.5) AS BIGINT) AS dm")
         .groupBy("query_id", "doc_id", "q_tok").agg(F.max("dm").alias("m"))
         .groupBy("query_id", "doc_id")

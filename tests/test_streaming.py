@@ -807,3 +807,61 @@ def test_top_k_idioms_stay_in_their_helper():
         "retrieval.mrr_retrieval_eval",  # first relevant rank can pass any k
         "retrieval.loso_source_influence",  # measured faster than the k = 1 reduction
     }
+
+
+def test_vector_algebra_stays_in_vec():
+    """The dot-product, squared-L2 and nearest-centroid folds, Spark and
+    DuckDB, are spelled only in functions/vec.py, no _*DOT/_*SQD template
+    is defined anywhere, and no Spark cosine divides a vec.dot by hand:
+    vec.cosine owns the zero-norm contract."""
+    import ast
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "uk_procurement_data_pipeline_spark"
+    fold = re.compile(
+        # Spark zip_with lambdas: elementwise product, squared difference
+        r"\((\w+), (\w+)\) -> (CAST\(\1 AS DOUBLE\) \* CAST\(\2 AS DOUBLE\)"
+        r"|\1 \* \2|\(\1 - \2\) \* \(\1 - \2\))"
+        r"|list_reduce\(list_transform\(generate_series\(1, len\([^)]*\)\),"
+        r" i -> (CAST\([^]]*\[i\] AS DOUBLE\) \* CAST|\([^]]*\[i\] - [^]]*\[i\]\) \* \()"
+        r"|named_struct\('d2', CAST\('Infinity' AS DOUBLE\)"  # nearest-centroid argmin
+    )
+
+    def text(n):  # a string literal with each f-string field as {}
+        if isinstance(n, ast.Constant) and isinstance(n.value, str):
+            return n.value
+        if isinstance(n, ast.JoinedStr):
+            return "".join(text(v) if isinstance(v, ast.Constant) else "{}" for v in n.values)
+        return ""
+
+    def fold_spelling(n):
+        return bool(fold.search(re.sub(r"\s+", " ", text(n))))
+
+    def is_dot(n):
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and n.func.attr == "expr":
+            n = n.args[0] if n.args else None
+        return isinstance(n, ast.Call) and isinstance(n.func, ast.Name) and n.func.id == "dot"
+
+    def hand_cosine(n):
+        if isinstance(n, ast.BinOp) and isinstance(n.op, ast.Div):
+            return is_dot(n.left)
+        if isinstance(n, ast.JoinedStr):
+            return any(
+                isinstance(v, ast.FormattedValue) and is_dot(v.value)
+                and text(n.values[i + 1]).lstrip().startswith("/")
+                for i, v in enumerate(n.values[:-1])
+            )
+        return False
+
+    modules = list(pkg.rglob("*.py"))
+    assert set().union(*(_owners(p, fold_spelling) for p in modules)) == {
+        "vec.dot", "vec.sqd", "vec.nearest", "vec.duck_dot", "vec.duck_sqd",
+    }
+    names = {
+        n.id if isinstance(n, ast.Name) else n.name
+        for p in modules for n in ast.walk(ast.parse(p.read_text()))
+        if isinstance(n, (ast.Name, ast.FunctionDef, ast.ClassDef))
+    }
+    assert {x for x in names if re.fullmatch(r"_\w*(DOT|SQD)", x)} == set()
+    assert set().union(*(_owners(p, hand_cosine) for p in modules)) == set()

@@ -12,6 +12,7 @@ from pathlib import Path
 
 import duckdb
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
@@ -117,7 +118,6 @@ def test_hard_negatives_lsh_matches_oracle_on_nan_and_null_cosines(spark, sf_dir
     NULL element, so every cosine through the first is NaN and through the
     second NULL. The oracle's ORDER BY cosine DESC takes a NaN candidate
     first and a NULL one last; the query must pick the same negatives."""
-    import pyarrow.parquet as pq
     from oracle_check import check_one, duckdb_conn
 
     from uk_procurement_data_pipeline_spark.queries import registry
@@ -148,6 +148,59 @@ def test_hard_negatives_lsh_matches_oracle_on_nan_and_null_cosines(spark, sf_dir
     con = duckdb_conn(str(tmp_path))
     try:
         ok, msg, _ = check_one(spark, con, spec, str(tmp_path))
+    finally:
+        con.close()
+    assert ok, msg
+
+
+# The queries that divide a dot product by a product of norms.
+_COSINE_QUERIES = (
+    "mmr_diversified_rerank", "semdedup_prune", "embedding_near_dup",
+    "cosine_topk_bruteforce", "ann_lsh_multiprobe", "ann_ivf_probed",
+    "ann_lsh_bucketed", "hard_negatives_lsh", "rrf_fusion_ann",
+    "ann_ndcg_report", "ann_recall_report",
+)
+
+
+def _zero_vector_copy(sf_dir, tmp_path, ids=(7, 200)):
+    """``sf_dir`` in ``tmp_path`` with the embeddings of ``ids`` all zero
+    and every other table symlinked."""
+    for f in Path(sf_dir).iterdir():
+        if f.name != "embeddings.parquet":
+            (tmp_path / f.name).symlink_to(f)
+    emb = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    vec_ids = emb.column("vec_id").to_pylist()
+    assert set(ids) <= set(vec_ids)
+    vecs = [
+        [0.0] * len(v) if i in ids else v
+        for i, v in zip(vec_ids, emb.column("embedding").to_pylist())
+    ]
+    col = emb.schema.get_field_index("embedding")
+    pq.write_table(
+        emb.set_column(col, emb.schema.field(col), pa.array(vecs, emb.schema.field(col).type)),
+        tmp_path / "embeddings.parquet",
+    )
+    return tmp_path
+
+
+@pytest.fixture(scope="module")
+def zero_vector_dir(sf_dir, tmp_path_factory):
+    # vec_id 200 is also a query vector (vec_id % 100 = 0)
+    return str(_zero_vector_copy(sf_dir, tmp_path_factory.mktemp("zero_vectors")))
+
+
+@pytest.mark.parametrize("name", _COSINE_QUERIES)
+def test_cosine_queries_match_oracle_on_zero_vectors(spark, zero_vector_dir, name):
+    """A zero vector's cosines are NULL (vec.cosine), ranked last and
+    dropped by thresholds, which is what the oracles do with DuckDB's
+    NULL for x / 0.0. Under ANSI a plain Spark division would raise."""
+    from oracle_check import check_one, duckdb_conn
+
+    from uk_procurement_data_pipeline_spark.queries import registry
+
+    con = duckdb_conn(zero_vector_dir)
+    try:
+        ok, msg, _ = check_one(spark, con, registry()[name], zero_vector_dir)
     finally:
         con.close()
     assert ok, msg

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from uk_procurement_data_pipeline_spark.catalog import load
+from uk_procurement_data_pipeline_spark.functions.vec import cosine, duck_dot, duck_sqd, norm, sqd
 from uk_procurement_data_pipeline_spark.queries.base import register
 
 _T = "split(text, ' ')"  # Spark tokens
@@ -302,23 +303,6 @@ _SEM_CELL = 256
 _SEM_K_SQL = f"GREATEST(8, CAST(CEIL(count(*) / {_SEM_CELL}.0) AS BIGINT))"
 _SEM_COS = 0.4
 
-_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-    " 0D, (acc, v) -> acc + v)"
-)
-_D_DOT = (
-    "list_reduce(list_transform(generate_series(1, len({a})),"
-    " i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
-)
-_SQD = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
-    " 0D, (acc, t) -> acc + t)"
-)
-_D_SQD = (
-    "list_reduce(list_transform(generate_series(1, len({a})),"
-    " i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])), (x, y) -> x + y)"
-)
-
 
 @register(
     name="semdedup_prune",
@@ -342,7 +326,7 @@ _D_SQD = (
             WHERE vec_id < (SELECT {_SEM_K_SQL} FROM e)),
         d AS (
             SELECT e.vec_id, e.v, c.cid,
-                   {_D_SQD.format(a='e.v', b='c.cv')} AS d2
+                   {duck_sqd('e.v', 'c.cv')} AS d2
             FROM e JOIN c0 c ON TRUE),
         a AS (
             SELECT vec_id, v, cid AS cluster,
@@ -351,13 +335,13 @@ _D_SQD = (
             FROM d),
         asg AS (
             SELECT vec_id, v,
-                   sqrt({_D_DOT.format(a='v', b='v')}) AS nrm, cluster
+                   sqrt({duck_dot('v', 'v')}) AS nrm, cluster
             FROM a WHERE rn = 1),
         pruned AS (
             SELECT DISTINCT b.vec_id
             FROM asg a JOIN asg b
               ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-            WHERE {_D_DOT.format(a='a.v', b='b.v')} / (a.nrm * b.nrm)
+            WHERE {duck_dot('a.v', 'b.v')} / (a.nrm * b.nrm)
                       >= {_SEM_COS})
         SELECT asg.vec_id, asg.cluster,
                (pruned.vec_id IS NULL) AS is_kept
@@ -389,19 +373,19 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # map-side: collect the k centroids into ONE broadcast array row and
     # take array_min over (d2, cid) structs — struct ordering (d2 ASC,
     # cid ASC) is exactly the old window's ORDER BY d2, cid with rn=1,
-    # computed from the identical zip_with/aggregate d2 expression.
+    # computed from the identical vec.sqd d2 expression.
     # Zero exchanges, zero row fan-out, and each re-execution is one
     # projection pass.
     cents = c0.agg(
         F.expr("collect_list(struct(cid, cv))").alias("cents")
     )
-    d2_fold = _SQD.format(a="v", b="c.cv")
+    d2_fold = sqd("v", "c.cv")
     asg = (
         e.crossJoin(F.broadcast(cents))
         .selectExpr(
             "vec_id",
             "v",
-            f"sqrt({_DOT.format(a='v', b='v')}) AS nrm",
+            f"{norm('v')} AS nrm",
             f"array_min(transform(cents,"
             f" c -> struct({d2_fold} AS d2, c.cid AS cid))).cid AS cluster",
         )
@@ -422,7 +406,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("ib"), F.col("v").alias("vb"),
         F.col("nrm").alias("nb"), F.col("cluster").alias("cb"),
     )
-    cos = F.expr(_DOT.format(a="va", b="vb")) / (F.col("na") * F.col("nb"))
+    cos = F.expr(cosine("va", "vb", "na", "nb"))
     pruned = (
         a.join(b, (F.col("ca") == F.col("cb")) & (F.col("ia") < F.col("ib")))
         .where(cos >= _SEM_COS)

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from uk_procurement_data_pipeline_spark.catalog import load, local_table, spread
+from uk_procurement_data_pipeline_spark.functions.vec import cosine, duck_dot, norm
 from uk_procurement_data_pipeline_spark.queries.base import register
 
 # --- shared expression fragments (Spark SQL / DuckDB SQL) -------------------
@@ -370,15 +371,6 @@ def ngram_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COS_THRESHOLD = 0.4
 _NDUP_BITS = 6
 
-_E_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-    " 0D, (acc, v) -> acc + v)"
-)
-_DE_DOT = (
-    "list_reduce(list_transform(generate_series(1, len({a})),"
-    " i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
-)
-
 
 @register(
     name="embedding_near_dup",
@@ -390,16 +382,16 @@ _DE_DOT = (
     oracle=f"""
         WITH e AS (
             SELECT vec_id, embedding,
-                   sqrt({_DE_DOT.format(a='embedding', b='embedding')}) AS nrm,
+                   sqrt({duck_dot('embedding', 'embedding')}) AS nrm,
                    array_to_string(list_transform(embedding[1:{_NDUP_BITS}],
                        x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), '')
                        AS bucket
             FROM embeddings)
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               {_DE_DOT.format(a='a.embedding', b='b.embedding')}
+               {duck_dot('a.embedding', 'b.embedding')}
                    / (a.nrm * b.nrm) AS cosine
         FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-        WHERE {_DE_DOT.format(a='a.embedding', b='b.embedding')}
+        WHERE {duck_dot('a.embedding', 'b.embedding')}
                   / (a.nrm * b.nrm) >= {_COS_THRESHOLD}
     """,
 )
@@ -407,7 +399,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").selectExpr(
         "vec_id",
         "embedding",
-        f"sqrt({_E_DOT.format(a='embedding', b='embedding')}) AS nrm",
+        f"{norm('embedding')} AS nrm",
         f"""concat_ws('', transform(slice(embedding, 1, {_NDUP_BITS}),
              x -> if(x >= 0, '1', '0'))) AS bucket""",
     )
@@ -419,7 +411,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"),
         F.col("nrm").alias("nb"), F.col("bucket").alias("bucket_b"),
     )
-    cos = F.expr(_E_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
+    cos = F.expr(cosine("ea", "eb", "na", "nb"))
     return (
         a.join(b, (a.bucket == b.bucket_b) & (F.col("vec_a") < F.col("vec_b")))
         .select("vec_a", "vec_b", cos.alias("cosine"))

@@ -3,18 +3,18 @@
 Two paths, as the north star mandates:
 
 * ``cosine_topk_bruteforce`` — the oracle-able baseline: broadcast the
-  (small) query set against all vectors and fold the dot product with
-  ``zip_with``/``aggregate``. Correct at any scale where the QUERY side is
-  small (the candidate side streams; nothing is collected), but its cost is
-  |Q|×N — the baseline, not the scale path.
+  (small) query set against all vectors and fold the dot product. Correct
+  at any scale where the QUERY side is small (the candidate side streams;
+  nothing is collected), but its cost is |Q|×N — the baseline, not the
+  scale path.
 * ``ann_lsh_bucketed`` — the 100 TB path: sign-bit LSH buckets (axis-aligned
   random-hyperplane family) turn the similarity join into a bucket
   equi-join; cosine is refined only within buckets. Shuffle is linear in
   data size; recall is tunable by bucket bits / multi-probe.
 
-Determinism across engines: float32 → double casts are exact; both engines
-fold the product arrays sequentially (Spark ``aggregate``, DuckDB
-``list_reduce``), so dot products, norms, and cosines are bit-identical.
+Determinism across engines: dot products, squared distances, norms and
+cosines come from ``functions/vec.py``, whose sequential folds are
+bit-identical in both engines and whose cosine is NULL on a zero norm.
 """
 
 from __future__ import annotations
@@ -25,20 +25,13 @@ from pyspark.sql import functions as F
 from uk_procurement_data_pipeline_spark.catalog import load, local_table
 from uk_procurement_data_pipeline_spark.functions.exact import oracle_sum
 from uk_procurement_data_pipeline_spark.functions.topk import top_k_per_group
+from uk_procurement_data_pipeline_spark.functions.vec import (
+    cosine, dot, duck_dot, duck_sqd, nearest, norm, sqd,
+)
 from uk_procurement_data_pipeline_spark.queries.base import register
 
 _TOPK = 5
 _BUCKET_BITS = 4  # sign bits of the leading dims -> 2^4 buckets
-
-# sequential-fold dot product between two float arrays, as double
-_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-    " 0D, (acc, v) -> acc + v)"
-)
-_D_DOT = (
-    "list_reduce(list_transform(generate_series(1, len({a})),"
-    " i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
-)
 
 _SIGN_BUCKET = (
     "concat_ws('', transform(slice({v}, 1, " + str(_BUCKET_BITS) + "),"
@@ -54,19 +47,20 @@ _D_SIGN_BUCKET = (
     name="cosine_topk_bruteforce",
     survey="J9 UD4 W1",
     doc="Brute-force cosine top-k: broadcast query vectors (vec_id % 100 = 0) "
-    "against all embeddings, sequential-fold dot/norms, row_number top-5 per "
-    "query with deterministic (cos DESC, id) tiebreak.",
+    "against all embeddings, sequential-fold dot/norms, top_k_per_group "
+    "top-5 per query with deterministic (cos DESC, id) tiebreak; a zero "
+    "norm gives a NULL cosine, ranked last.",
     oracle=f"""
         WITH e AS (
             SELECT vec_id, embedding,
-                   sqrt({_D_DOT.format(a='embedding', b='embedding')}) AS nrm
+                   sqrt({duck_dot('embedding', 'embedding')}) AS nrm
             FROM embeddings),
         q AS (
             SELECT vec_id AS query_id, embedding AS qv, nrm AS qn
             FROM e WHERE vec_id % 100 = 0),
         p AS (
             SELECT q.query_id, e.vec_id AS neighbor_id,
-                   {_D_DOT.format(a='qv', b='embedding')} / (qn * e.nrm) AS cosine
+                   {duck_dot('qv', 'embedding')} / (qn * e.nrm) AS cosine
             FROM q JOIN e ON e.vec_id <> q.query_id),
         r AS (
             SELECT query_id, neighbor_id, cosine,
@@ -81,7 +75,7 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").selectExpr(
         "vec_id",
         "embedding",
-        f"sqrt({_DOT.format(a='embedding', b='embedding')}) AS nrm",
+        f"{norm('embedding')} AS nrm",
     )
     q = e.where(F.col("vec_id") % 100 == 0).selectExpr(
         "vec_id AS query_id", "embedding AS qv", "nrm AS qn"
@@ -89,7 +83,7 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).selectExpr(
         "query_id",
         "vec_id AS neighbor_id",
-        f"{_DOT.format(a='qv', b='embedding')} / (qn * nrm) AS cosine",
+        f"{cosine('qv', 'embedding', 'qn', 'nrm')} AS cosine",
     )
     return top_k_per_group(
         pairs, ["query_id"], ["cosine DESC", "neighbor_id"], _TOPK, rank="rank"
@@ -108,7 +102,7 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH e AS (
             SELECT vec_id, embedding,
-                   sqrt({_D_DOT.format(a='embedding', b='embedding')}) AS nrm,
+                   sqrt({duck_dot('embedding', 'embedding')}) AS nrm,
                    {_D_SIGN_BUCKET.format(v='embedding')} AS bucket
             FROM embeddings),
         q0 AS (
@@ -126,7 +120,7 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
                               AS i) f),
         p AS (
             SELECT DISTINCT pr.query_id, e.vec_id AS neighbor_id,
-                   {_D_DOT.format(a='qv', b='embedding')} / (qn * e.nrm) AS cosine
+                   {duck_dot('qv', 'embedding')} / (qn * e.nrm) AS cosine
             FROM probes pr JOIN e ON pr.bucket = e.bucket
                  AND e.vec_id <> pr.query_id),
         r AS (
@@ -142,7 +136,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").selectExpr(
         "vec_id",
         "embedding",
-        f"sqrt({_DOT.format(a='embedding', b='embedding')}) AS nrm",
+        f"{norm('embedding')} AS nrm",
         f"{_SIGN_BUCKET.format(v='embedding')} AS bucket",
     )
     q = e.where(F.col("vec_id") % 100 == 0).selectExpr(
@@ -174,7 +168,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "query_id",
             "vec_id AS neighbor_id",
-            f"{_DOT.format(a='qv', b='embedding')} / (qn * nrm) AS cosine",
+            f"{cosine('qv', 'embedding', 'qn', 'nrm')} AS cosine",
         )
         .distinct()  # a neighbor is in exactly one bucket, but stay safe
     )
@@ -201,14 +195,14 @@ _IVF_PROBE = 2  # cells probed per query (recall knob)
     oracle=f"""
         WITH e AS (
             SELECT vec_id, embedding,
-                   sqrt({_D_DOT.format(a='embedding', b='embedding')}) AS nrm
+                   sqrt({duck_dot('embedding', 'embedding')}) AS nrm
             FROM embeddings),
         c AS (
             SELECT vec_id AS centroid_id, embedding AS cv, nrm AS cn
             FROM e WHERE vec_id < {_IVF_K}),
         a0 AS (
             SELECT e.vec_id, e.embedding, e.nrm, c.centroid_id,
-                   {_D_DOT.format(a='e.embedding', b='cv')} / (e.nrm * cn) AS ccos
+                   {duck_dot('e.embedding', 'cv')} / (e.nrm * cn) AS ccos
             FROM e JOIN c ON TRUE),
         a AS (
             SELECT vec_id, embedding, nrm, centroid_id,
@@ -224,7 +218,7 @@ _IVF_PROBE = 2  # cells probed per query (recall knob)
             FROM a WHERE vec_id % 100 = 0 AND crn <= {_IVF_PROBE}),
         p AS (
             SELECT qc.query_id, cells.vec_id AS neighbor_id,
-                   {_D_DOT.format(a='qv', b='cells.embedding')}
+                   {duck_dot('qv', 'cells.embedding')}
                        / (qn * cells.nrm) AS cosine
             FROM qc JOIN cells ON qc.cell = cells.cell
                  AND cells.vec_id <> qc.query_id),
@@ -241,7 +235,7 @@ def ann_ivf_probed(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").selectExpr(
         "vec_id",
         "embedding",
-        f"sqrt({_DOT.format(a='embedding', b='embedding')}) AS nrm",
+        f"{norm('embedding')} AS nrm",
     )
     c = e.where(F.col("vec_id") < _IVF_K).selectExpr(
         "vec_id AS centroid_id", "embedding AS cv", "nrm AS cn"
@@ -254,7 +248,7 @@ def ann_ivf_probed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         "nrm",
         "centroid_id",
-        f"{_DOT.format(a='embedding', b='cv')} / (nrm * cn) AS ccos",
+        f"{cosine('embedding', 'cv', 'nrm', 'cn')} AS ccos",
     )
     best = ["ccos DESC", "centroid_id"]
     cells = top_k_per_group(assign, ["vec_id"], best, 1).selectExpr(
@@ -269,7 +263,7 @@ def ann_ivf_probed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).selectExpr(
         "query_id",
         "vec_id AS neighbor_id",
-        f"{_DOT.format(a='qv', b='embedding')} / (qn * nrm) AS cosine",
+        f"{cosine('qv', 'embedding', 'qn', 'nrm')} AS cosine",
     )
     return top_k_per_group(
         pairs, ["query_id"], ["cosine DESC", "neighbor_id"], 3, rank="rank"
@@ -286,7 +280,7 @@ def ann_ivf_probed(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH e AS (
             SELECT vec_id, embedding,
-                   sqrt({_D_DOT.format(a='embedding', b='embedding')}) AS nrm,
+                   sqrt({duck_dot('embedding', 'embedding')}) AS nrm,
                    {_D_SIGN_BUCKET.format(v='embedding')} AS bucket
             FROM embeddings),
         q AS (
@@ -294,7 +288,7 @@ def ann_ivf_probed(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM e WHERE vec_id % 100 = 0),
         p AS (
             SELECT q.query_id, e.vec_id AS neighbor_id,
-                   {_D_DOT.format(a='qv', b='embedding')} / (qn * e.nrm) AS cosine
+                   {duck_dot('qv', 'embedding')} / (qn * e.nrm) AS cosine
             FROM q JOIN e ON q.bucket = e.bucket AND e.vec_id <> q.query_id),
         r AS (
             SELECT query_id, neighbor_id, cosine,
@@ -309,7 +303,7 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").selectExpr(
         "vec_id",
         "embedding",
-        f"sqrt({_DOT.format(a='embedding', b='embedding')}) AS nrm",
+        f"{norm('embedding')} AS nrm",
         f"{_SIGN_BUCKET.format(v='embedding')} AS bucket",
     )
     q = e.where(F.col("vec_id") % 100 == 0).selectExpr(
@@ -321,23 +315,12 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).selectExpr(
         "query_id",
         "vec_id AS neighbor_id",
-        f"{_DOT.format(a='qv', b='embedding')} / (qn * nrm) AS cosine",
+        f"{cosine('qv', 'embedding', 'qn', 'nrm')} AS cosine",
     )
     return top_k_per_group(
         pairs, ["query_id"], ["cosine DESC", "neighbor_id"], 3, rank="rank"
     )
 
-
-# Squared-L2 distance as a sequential fold (double arrays in, double out):
-# same bit-identical-fold contract as _DOT.
-_SQD = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
-    " 0D, (acc, t) -> acc + t)"
-)
-_D_SQD = (
-    "list_reduce(list_transform(generate_series(1, len({a})),"
-    " i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])), (x, y) -> x + y)"
-)
 
 _KM_K = 8  # Lloyd cells; production sizing follows the IVF rule K ~ sqrt(N)
 
@@ -365,7 +348,7 @@ _KM_K = 8  # Lloyd cells; production sizing follows the IVF rule K ~ sqrt(N)
             SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {_KM_K}),
         d1 AS (
             SELECT e.vec_id, e.v, c.cid,
-                   {_D_SQD.format(a='e.v', b='c.cv')} AS d2
+                   {duck_sqd('e.v', 'c.cv')} AS d2
             FROM e JOIN c0 c ON TRUE),
         a1 AS (
             SELECT vec_id, v, cid AS cluster,
@@ -385,7 +368,7 @@ _KM_K = 8  # Lloyd cells; production sizing follows the IVF rule K ~ sqrt(N)
             GROUP BY cluster),
         d2t AS (
             SELECT e.vec_id, c.cid,
-                   {_D_SQD.format(a='e.v', b='c.cv')} AS d2
+                   {duck_sqd('e.v', 'c.cv')} AS d2
             FROM e JOIN cent1 c ON TRUE),
         a2 AS (
             SELECT vec_id, cid, d2,
@@ -407,20 +390,13 @@ def kmeans_lloyd_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Fold the K broadcast centroids per row instead of exploding N x K
         # pairs through a per-vector window: assignment is then a pure
         # map-side pass with ZERO shuffle (the window form shuffles N x K
-        # rows on vec_id — a real cost at corpus scale). The explicit
-        # (d2, cid) comparison makes the fold's argmin independent of
-        # collect_list order.
+        # rows on vec_id — a real cost at corpus scale). vec.nearest's
+        # (d2, cid) tiebreak makes the argmin independent of collect_list
+        # order.
         cent_arr = cents.agg(
             F.collect_list(F.struct("cid", "cv")).alias("cs")
         ).withColumn("k", F.lit(1))
-        scored = (
-            f"aggregate(transform(cs, c -> named_struct("
-            f"'d2', {_SQD.format(a='v', b='c.cv')}, 'cid', c.cid)), "
-            "named_struct('d2', CAST('Infinity' AS DOUBLE), "
-            "'cid', CAST(-1 AS BIGINT)), "
-            "(acc, s) -> IF(s.d2 < acc.d2"
-            " OR (s.d2 = acc.d2 AND s.cid < acc.cid), s, acc))"
-        )
+        scored = nearest("cs", "v")
         return (
             points.withColumn("k", F.lit(1))
             .join(F.broadcast(cent_arr), "k")
@@ -608,13 +584,13 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH e AS (
             SELECT vec_id, label, embedding,
-                   sqrt({_D_DOT.format(a='embedding', b='embedding')}) AS nrm,
+                   sqrt({duck_dot('embedding', 'embedding')}) AS nrm,
                    {_D_SIGN_BUCKET.format(v='embedding')} AS bucket
             FROM embeddings),
         p AS (
             SELECT a.vec_id AS anchor_id, a.label,
                    z.vec_id AS negative_id, z.label AS negative_label,
-                   {_D_DOT.format(a='a.embedding', b='z.embedding')}
+                   {duck_dot('a.embedding', 'z.embedding')}
                        / (a.nrm * z.nrm) AS cosine
             FROM e a JOIN e z
               ON a.bucket = z.bucket AND a.label <> z.label),
@@ -632,7 +608,7 @@ def hard_negatives_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         "embedding",
-        f"sqrt({_DOT.format(a='embedding', b='embedding')}) AS nrm",
+        f"{norm('embedding')} AS nrm",
         f"{_SIGN_BUCKET.format(v='embedding')} AS bucket",
     )
     a = e.selectExpr(
@@ -652,7 +628,7 @@ def hard_negatives_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         "negative_id",
         "negative_label",
-        f"{_DOT.format(a='av', b='zv')} / (an * zn) AS cosine",
+        f"{cosine('av', 'zv', 'an', 'zn')} AS cosine",
     )
     return top_k_per_group(
         pairs, ["anchor_id", "label"], ["cosine DESC", "negative_id"], 1
@@ -814,8 +790,7 @@ def jl_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"CASE WHEN size(vd) <> {_JL_IN} THEN raise_error(concat("
             f"'jl_random_projection: embedding width ', cast(size(vd) AS "
             f"string), ' != expected {_JL_IN}')) "
-            "ELSE aggregate(zip_with(vd, sgn, (x, s) -> x * s), 0D,"
-            " (acc, t) -> acc + t) END AS proj",
+            f"ELSE {dot('vd', 'sgn')} END AS proj",
         )
     )
 
@@ -1672,23 +1647,23 @@ def embedding_mmd_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH e AS MATERIALIZED (
             SELECT vec_id, embedding,
-                   sqrt({_D_DOT.format(a='embedding', b='embedding')}) AS nrm
+                   sqrt({duck_dot('embedding', 'embedding')}) AS nrm
             FROM embeddings),
         q AS (
             SELECT embedding AS qv, nrm AS qn FROM e WHERE vec_id = 0),
         cand AS MATERIALIZED (
             SELECT vec_id, embedding, nrm, rel FROM (
               SELECT e.vec_id, e.embedding, e.nrm,
-                     {_D_DOT.format(a='qv', b='embedding')} / (qn * e.nrm)
+                     {duck_dot('qv', 'embedding')} / (qn * e.nrm)
                          AS rel,
                      ROW_NUMBER() OVER (ORDER BY
-                       {_D_DOT.format(a='qv', b='embedding')} / (qn * e.nrm)
+                       {duck_dot('qv', 'embedding')} / (qn * e.nrm)
                          DESC, e.vec_id) AS rn
               FROM e CROSS JOIN q WHERE e.vec_id <> 0) t
             WHERE rn <= 12),
         pairs AS MATERIALIZED (
             SELECT a.vec_id AS ca, b.vec_id AS cb,
-                   {_D_DOT.format(a='a.embedding', b='b.embedding')}
+                   {duck_dot('a.embedding', 'b.embedding')}
                      / (a.nrm * b.nrm) AS sim
             FROM cand a JOIN cand b ON a.vec_id <> b.vec_id),
         s1 AS (
@@ -1746,7 +1721,7 @@ def mmr_diversified_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").selectExpr(
         "vec_id",
         "embedding",
-        f"sqrt({_DOT.format(a='embedding', b='embedding')}) AS nrm",
+        f"{norm('embedding')} AS nrm",
     )
     q = e.where(F.col("vec_id") == 0).selectExpr(
         "embedding AS qv", "nrm AS qn"
@@ -1755,7 +1730,7 @@ def mmr_diversified_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         "nrm",
-        f"{_DOT.format(a='qv', b='embedding')} / (qn * nrm) AS rel",
+        f"{cosine('qv', 'embedding', 'qn', 'nrm')} AS rel",
     )
     # orderBy+limit compiles to TakeOrderedAndProject (distributed
     # per-partition top-k + merge), not a single-partition window sort.
@@ -1771,7 +1746,7 @@ def mmr_diversified_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = a.join(b, F.col("a.vec_id") != F.col("b.vec_id")).selectExpr(
         "a.vec_id AS ca",
         "b.vec_id AS cb",
-        f"{_DOT.format(a='a.embedding', b='b.embedding')} / (a.nrm * b.nrm) AS sim",
+        f"{cosine('a.embedding', 'b.embedding', 'a.nrm', 'b.nrm')} AS sim",
     ).localCheckpoint(eager=True)
 
     def pick_first(df: DataFrame) -> DataFrame:
@@ -1831,7 +1806,7 @@ _NDCG_IDCG = sum((6 - r) * w for r, w in _NDCG_W.items())  # 10702596
     oracle=f"""
         WITH e AS (
             SELECT vec_id, embedding,
-                   sqrt({_D_DOT.format(a='embedding', b='embedding')})
+                   sqrt({duck_dot('embedding', 'embedding')})
                        AS nrm,
                    {_D_SIGN_BUCKET.format(v='embedding')} AS bucket
             FROM embeddings),
@@ -1844,7 +1819,7 @@ _NDCG_IDCG = sum((6 - r) * w for r, w in _NDCG_W.items())  # 10702596
             FROM (
               SELECT q.query_id, e.vec_id AS neighbor_id,
                      ROW_NUMBER() OVER (PARTITION BY q.query_id
-                       ORDER BY {_D_DOT.format(a='qv', b='embedding')}
+                       ORDER BY {duck_dot('qv', 'embedding')}
                                 / (qn * e.nrm) DESC, e.vec_id) AS rn
               FROM q JOIN e ON e.vec_id <> q.query_id) t
             WHERE rn <= 5),
@@ -1853,7 +1828,7 @@ _NDCG_IDCG = sum((6 - r) * w for r, w in _NDCG_W.items())  # 10702596
             FROM (
               SELECT q.query_id, e.vec_id AS neighbor_id,
                      ROW_NUMBER() OVER (PARTITION BY q.query_id
-                       ORDER BY {_D_DOT.format(a='qv', b='embedding')}
+                       ORDER BY {duck_dot('qv', 'embedding')}
                                 / (qn * e.nrm) DESC, e.vec_id) AS rn
               FROM q JOIN e ON e.bucket = q.qbucket
                            AND e.vec_id <> q.query_id) t
@@ -1877,13 +1852,13 @@ def ann_ndcg_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").selectExpr(
         "vec_id",
         "embedding",
-        f"sqrt({_DOT.format(a='embedding', b='embedding')}) AS nrm",
+        f"{norm('embedding')} AS nrm",
         f"{_SIGN_BUCKET.format(v='embedding')} AS bucket",
     )
     q = e.where(F.col("vec_id") % 100 == 0).selectExpr(
         "vec_id AS query_id", "embedding AS qv", "nrm AS qn", "bucket AS qbucket"
     )
-    cos = f"{_DOT.format(a='qv', b='embedding')} / (qn * nrm)"
+    cos = cosine("qv", "embedding", "qn", "nrm")
     best = ["cosine DESC", "neighbor_id"]
     truth = top_k_per_group(
         e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).selectExpr(
@@ -1951,7 +1926,7 @@ def ann_ndcg_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             JOIN LATERAL (
               SELECT c.cid
               FROM seeds c WHERE c.m = s.m
-              ORDER BY {_D_SQD.format(a='s.v', b='c.cv')}, c.cid
+              ORDER BY {duck_sqd('s.v', 'c.cv')}, c.cid
               LIMIT 1) t ON true),
         cent1 AS (
             SELECT m, cid, d.dim,
@@ -1969,9 +1944,9 @@ def ann_ndcg_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT s.vec_id, s.m, t.cid, t.d2
             FROM sub s
             JOIN LATERAL (
-              SELECT c.cid, {_D_SQD.format(a='s.v', b='c.cv')} AS d2
+              SELECT c.cid, {duck_sqd('s.v', 'c.cv')} AS d2
               FROM cb c WHERE c.m = s.m
-              ORDER BY {_D_SQD.format(a='s.v', b='c.cv')}, c.cid
+              ORDER BY {duck_sqd('s.v', 'c.cv')}, c.cid
               LIMIT 1) t ON true)
         SELECT CAST(m AS BIGINT) AS subspace, CAST(cid AS BIGINT) AS code,
                CAST(count(*) AS BIGINT) AS n_vecs,
@@ -2004,14 +1979,7 @@ def pq_codebook_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         cent_arr = cents.groupBy("m").agg(
             F.collect_list(F.struct("cid", "cv")).alias("cs")
         )
-        scored = (
-            f"aggregate(transform(cs, c -> named_struct("
-            f"'d2', {_SQD.format(a='v', b='c.cv')}, 'cid', c.cid)), "
-            "named_struct('d2', CAST('Infinity' AS DOUBLE), "
-            "'cid', CAST(-1 AS BIGINT)), "
-            "(acc, s) -> IF(s.d2 < acc.d2"
-            " OR (s.d2 = acc.d2 AND s.cid < acc.cid), s, acc))"
-        )
+        scored = nearest("cs", "v")
         return (
             points.join(F.broadcast(cent_arr), "m")
             .selectExpr("vec_id", "m", "v", f"{scored} AS best")
@@ -2085,7 +2053,7 @@ def pq_codebook_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM m0),
         w1 AS (
             SELECT e.vec_id, e.v,
-                   1.0 / greatest(sqrt({_D_SQD.format(a='e.v', b='x0.x')}),
+                   1.0 / greatest(sqrt({duck_sqd('e.v', 'x0.x')}),
                                   0.000000000001) AS w
             FROM e CROSS JOIN x0),
         m1 AS (
@@ -2101,7 +2069,7 @@ def pq_codebook_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM m1),
         w2 AS (
             SELECT e.vec_id, e.v,
-                   1.0 / greatest(sqrt({_D_SQD.format(a='e.v', b='x1.x')}),
+                   1.0 / greatest(sqrt({duck_sqd('e.v', 'x1.x')}),
                                   0.000000000001) AS w
             FROM e CROSS JOIN x1),
         m2 AS (
@@ -2158,7 +2126,7 @@ def geometric_median_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         return e.crossJoin(F.broadcast(x)).selectExpr(
             "vec_id",
             "v",
-            f"1.0 / greatest(sqrt({_SQD.format(a='v', b='x')}),"
+            f"1.0 / greatest(sqrt({sqd('v', 'x')}),"
             " 0.000000000001) AS w",
         )
 
@@ -2211,7 +2179,7 @@ def geometric_median_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             JOIN LATERAL (
               SELECT c.cid
               FROM seeds c WHERE c.m = s.m
-              ORDER BY {_D_SQD.format(a='s.v', b='c.cv')}, c.cid
+              ORDER BY {duck_sqd('s.v', 'c.cv')}, c.cid
               LIMIT 1) t ON true),
         cent1 AS (
             SELECT m, cid, d.dim,
@@ -2230,11 +2198,11 @@ def geometric_median_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM sub s
             JOIN LATERAL (
               SELECT c.cid FROM cb c WHERE c.m = s.m
-              ORDER BY {_D_SQD.format(a='s.v', b='c.cv')}, c.cid
+              ORDER BY {duck_sqd('s.v', 'c.cv')}, c.cid
               LIMIT 1) t ON true),
         lut AS (
             SELECT q.vec_id AS query_id, c.m, c.cid,
-                   {_D_SQD.format(a='q.v', b='c.cv')} AS d2
+                   {duck_sqd('q.v', 'c.cv')} AS d2
             FROM sub q JOIN cb c ON q.m = c.m
             WHERE q.vec_id >= 4 AND q.vec_id < 8),
         adc AS (
@@ -2275,14 +2243,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         cent_arr = cents.groupBy("m").agg(
             F.collect_list(F.struct("cid", "cv")).alias("cs")
         )
-        scored = (
-            f"aggregate(transform(cs, c -> named_struct("
-            f"'d2', {_SQD.format(a='v', b='c.cv')}, 'cid', c.cid)), "
-            "named_struct('d2', CAST('Infinity' AS DOUBLE), "
-            "'cid', CAST(-1 AS BIGINT)), "
-            "(acc, s) -> IF(s.d2 < acc.d2"
-            " OR (s.d2 = acc.d2 AND s.cid < acc.cid), s, acc))"
-        )
+        scored = nearest("cs", "v")
         return (
             points.join(F.broadcast(cent_arr), "m")
             .selectExpr("vec_id", "m", "v", f"{scored} AS best")
@@ -2313,7 +2274,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("vec_id", "query_id")
         .join(F.broadcast(cent1), "m")
         .selectExpr(
-            "query_id", "m", "cid", f"{_SQD.format(a='v', b='cv')} AS d2"
+            "query_id", "m", "cid", f"{sqd('v', 'cv')} AS d2"
         )
     )
     adc = (
@@ -2366,7 +2327,7 @@ _PQR_SLS = [20, 100, 500]  # ADC shortlist sizes probed
             FROM sub s
             JOIN LATERAL (
               SELECT c.cid FROM seeds c WHERE c.m = s.m
-              ORDER BY {_D_SQD.format(a='s.v', b='c.cv')}, c.cid
+              ORDER BY {duck_sqd('s.v', 'c.cv')}, c.cid
               LIMIT 1) t ON true),
         cent1 AS (
             SELECT m, cid, d.dim,
@@ -2385,11 +2346,11 @@ _PQR_SLS = [20, 100, 500]  # ADC shortlist sizes probed
             FROM sub s
             JOIN LATERAL (
               SELECT c.cid FROM cb c WHERE c.m = s.m
-              ORDER BY {_D_SQD.format(a='s.v', b='c.cv')}, c.cid
+              ORDER BY {duck_sqd('s.v', 'c.cv')}, c.cid
               LIMIT 1) t ON true),
         lut AS (
             SELECT q.vec_id AS query_id, c.m, c.cid,
-                   {_D_SQD.format(a='q.v', b='c.cv')} AS d2
+                   {duck_sqd('q.v', 'c.cv')} AS d2
             FROM sub q JOIN cb c ON q.m = c.m
             WHERE q.vec_id >= 16 AND q.vec_id < 20),
         adc AS (
@@ -2411,7 +2372,7 @@ _PQR_SLS = [20, 100, 500]  # ADC shortlist sizes probed
         exact AS (
             SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
                    row_number() OVER (PARTITION BY q.vec_id
-                       ORDER BY {_D_SQD.format(a='q.v', b='x.v')}, x.vec_id)
+                       ORDER BY {duck_sqd('q.v', 'x.v')}, x.vec_id)
                        AS rank
             FROM vd q JOIN vd x ON q.vec_id != x.vec_id
             WHERE q.vec_id >= 16 AND q.vec_id < 20)
@@ -2450,14 +2411,7 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         cent_arr = cents.groupBy("m").agg(
             F.collect_list(F.struct("cid", "cv")).alias("cs")
         )
-        scored = (
-            f"aggregate(transform(cs, c -> named_struct("
-            f"'d2', {_SQD.format(a='v', b='c.cv')}, 'cid', c.cid)), "
-            "named_struct('d2', CAST('Infinity' AS DOUBLE), "
-            "'cid', CAST(-1 AS BIGINT)), "
-            "(acc, s) -> IF(s.d2 < acc.d2"
-            " OR (s.d2 = acc.d2 AND s.cid < acc.cid), s, acc))"
-        )
+        scored = nearest("cs", "v")
         return (
             points.join(F.broadcast(cent_arr), "m")
             .selectExpr("vec_id", "m", "v", f"{scored} AS best")
@@ -2488,7 +2442,7 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("vec_id", "query_id")
         .join(F.broadcast(cent1), "m")
         .selectExpr(
-            "query_id", "m", "cid", f"{_SQD.format(a='v', b='cv')} AS d2"
+            "query_id", "m", "cid", f"{sqd('v', 'cv')} AS d2"
         )
     )
     adc = (
@@ -2517,7 +2471,7 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "query_id",
             "vec_id AS neighbor_id",
-            f"{_SQD.format(a='qv', b='v')} AS d2",
+            f"{sqd('qv', 'v')} AS d2",
         ),
         ["query_id"], ["d2", "neighbor_id"], 5,
     ).select("query_id", "neighbor_id")
@@ -2575,7 +2529,7 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM tok WHERE doc_id < 2),
         dots AS (
             SELECT q.query_id, d.doc_id, q.tok_idx,
-                   CAST(floor({_D_DOT.format(a='q.qe', b='d.embedding')}
+                   CAST(floor({duck_dot('q.qe', 'd.embedding')}
                               * 1000000 + 0.5) AS BIGINT) AS dot_micro
             FROM qt q JOIN tok d ON d.doc_id != q.query_id),
         best AS (
@@ -2608,7 +2562,7 @@ def late_interaction_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "doc_id",
             "q_tok",
-            f"CAST(floor({_DOT.format(a='qe', b='embedding')}"
+            f"CAST(floor({dot('qe', 'embedding')}"
             " * 1000000 + 0.5) AS BIGINT) AS dot_micro",
         )
     )
@@ -2666,7 +2620,7 @@ _TS_SL = 10  # per-query-token ADC shortlist depth before the exact rerank
             FROM sub s
             JOIN LATERAL (
               SELECT c.cid FROM seeds c WHERE c.m = s.m
-              ORDER BY {_D_SQD.format(a='s.v', b='c.cv')}, c.cid
+              ORDER BY {duck_sqd('s.v', 'c.cv')}, c.cid
               LIMIT 1) t ON true),
         cent1 AS (
             SELECT m, cid, d.dim,
@@ -2685,12 +2639,12 @@ _TS_SL = 10  # per-query-token ADC shortlist depth before the exact rerank
             FROM sub s
             JOIN LATERAL (
               SELECT c.cid FROM cb c WHERE c.m = s.m
-              ORDER BY {_D_SQD.format(a='s.v', b='c.cv')}, c.cid
+              ORDER BY {duck_sqd('s.v', 'c.cv')}, c.cid
               LIMIT 1) t ON true),
         lut AS (
             SELECT q.vec_id AS qtok, q.vec_id // 4 AS query_id,
                    c.m, c.cid,
-                   {_D_SQD.format(a='q.v', b='c.cv')} AS d2
+                   {duck_sqd('q.v', 'c.cv')} AS d2
             FROM sub q JOIN cb c ON q.m = c.m
             WHERE q.vec_id < 8),
         adc AS (
@@ -2719,7 +2673,7 @@ _TS_SL = 10  # per-query-token ADC shortlist depth before the exact rerank
             FROM embeddings WHERE vec_id < 8),
         dots AS (
             SELECT q.query_id, c.doc_id, q.q_tok,
-                   CAST(floor({_D_DOT.format(a='q.qe', b='d.embedding')}
+                   CAST(floor({duck_dot('q.qe', 'd.embedding')}
                               * 1000000 + 0.5) AS BIGINT) AS dot_micro
             FROM cands c
             JOIN qt q ON q.query_id = c.query_id
@@ -2761,14 +2715,7 @@ def two_stage_pq_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
         cent_arr = cents.groupBy("m").agg(
             F.collect_list(F.struct("cid", "cv")).alias("cs")
         )
-        scored = (
-            f"aggregate(transform(cs, c -> named_struct("
-            f"'d2', {_SQD.format(a='v', b='c.cv')}, 'cid', c.cid)), "
-            "named_struct('d2', CAST('Infinity' AS DOUBLE), "
-            "'cid', CAST(-1 AS BIGINT)), "
-            "(acc, s) -> IF(s.d2 < acc.d2"
-            " OR (s.d2 = acc.d2 AND s.cid < acc.cid), s, acc))"
-        )
+        scored = nearest("cs", "v")
         return (
             points.join(F.broadcast(cent_arr), "m")
             .selectExpr("vec_id", "m", "v", f"{scored} AS best")
@@ -2800,7 +2747,7 @@ def two_stage_pq_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cent1), "m")
         .selectExpr(
             "qtok", "query_id", "m", "cid",
-            f"{_SQD.format(a='v', b='cv')} AS d2",
+            f"{sqd('v', 'cv')} AS d2",
         )
     )
     shortlist = top_k_per_group(
@@ -2829,7 +2776,7 @@ def two_stage_pq_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(qt), "query_id")
         .selectExpr(
             "query_id", "doc_id", "q_tok",
-            f"CAST(floor({_DOT.format(a='qe', b='embedding')}"
+            f"CAST(floor({dot('qe', 'embedding')}"
             " * 1000000 + 0.5) AS BIGINT) AS dot_micro",
         )
     )
@@ -2923,7 +2870,7 @@ _OPQ_M = 4  # subspaces (16 dims each over the 64-dim embeddings)
             JOIN LATERAL (
               SELECT c.cid
               FROM seeds c WHERE c.m = s.m
-              ORDER BY {_D_SQD.format(a='s.v', b='c.cv')}, c.cid
+              ORDER BY {duck_sqd('s.v', 'c.cv')}, c.cid
               LIMIT 1) t ON true),
         cent1 AS (
             SELECT m, cid, d.dim,
@@ -2941,9 +2888,9 @@ _OPQ_M = 4  # subspaces (16 dims each over the 64-dim embeddings)
             SELECT s.vec_id, s.m, t.cid, t.d2
             FROM sub s
             JOIN LATERAL (
-              SELECT c.cid, {_D_SQD.format(a='s.v', b='c.cv')} AS d2
+              SELECT c.cid, {duck_sqd('s.v', 'c.cv')} AS d2
               FROM cb c WHERE c.m = s.m
-              ORDER BY {_D_SQD.format(a='s.v', b='c.cv')}, c.cid
+              ORDER BY {duck_sqd('s.v', 'c.cv')}, c.cid
               LIMIT 1) t ON true)
         SELECT CAST(m AS BIGINT) AS subspace, CAST(cid AS BIGINT) AS code,
                CAST(count(*) AS BIGINT) AS n_vecs,
@@ -3008,14 +2955,7 @@ def opq_variance_balanced_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         cent_arr = cents.groupBy("m").agg(
             F.collect_list(F.struct("cid", "cv")).alias("cs")
         )
-        scored = (
-            f"aggregate(transform(cs, c -> named_struct("
-            f"'d2', {_SQD.format(a='v', b='c.cv')}, 'cid', c.cid)), "
-            "named_struct('d2', CAST('Infinity' AS DOUBLE), "
-            "'cid', CAST(-1 AS BIGINT)), "
-            "(acc, s) -> IF(s.d2 < acc.d2"
-            " OR (s.d2 = acc.d2 AND s.cid < acc.cid), s, acc))"
-        )
+        scored = nearest("cs", "v")
         return (
             points.join(F.broadcast(cent_arr), "m")
             .selectExpr("vec_id", "m", "v", f"{scored} AS best")
@@ -3094,7 +3034,7 @@ def _gb_hop_ctes() -> str:
             ) WHERE node <> query_id),
         s{h} AS (
             SELECT c.query_id, c.node,
-                   {_D_SQD.format(a='q.qv', b='e.v')} AS d2
+                   {duck_sqd('q.qv', 'e.v')} AS d2
             FROM c{h} c
             JOIN q ON q.query_id = c.query_id
             JOIN e ON e.vec_id = c.node),
@@ -3154,7 +3094,7 @@ def _gb_hop_ctes() -> str:
                             FROM e)),
         post0 AS (
             SELECT e.vec_id, e.v, cent.cid,
-                   {_D_SQD.format(a='e.v', b='cent.cv')} AS cd2
+                   {duck_sqd('e.v', 'cent.cv')} AS cd2
             FROM e JOIN cent ON TRUE),
         post AS (
             SELECT vec_id, v, cid FROM (
@@ -3165,7 +3105,7 @@ def _gb_hop_ctes() -> str:
             WHERE crn <= {_GB_P}),
         pairs AS (
             SELECT a.vec_id AS src, b.vec_id AS dst,
-                   min({_D_SQD.format(a='a.v', b='b.v')}) AS d2
+                   min({duck_sqd('a.v', 'b.v')}) AS d2
             FROM post a JOIN post b
               ON a.cid = b.cid AND b.vec_id <> a.vec_id
             GROUP BY 1, 2),
@@ -3190,7 +3130,7 @@ def _gb_hop_ctes() -> str:
             FROM e WHERE vec_id % {_GB_QMOD} = {_GB_QREM}),
         s0 AS (
             SELECT q.query_id, s.vec_id AS node,
-                   {_D_SQD.format(a='q.qv', b='s.v')} AS d2
+                   {duck_sqd('q.qv', 's.v')} AS d2
             FROM q, e s
             WHERE s.vec_id % {_GB_SEEDMOD} = 0
               AND s.vec_id <> q.query_id),
@@ -3203,7 +3143,7 @@ def _gb_hop_ctes() -> str:
             WHERE rn <= {_GB_B}),{_gb_hop_ctes()},
         qp AS (
             SELECT q.query_id, s.vec_id AS node,
-                   {_D_SQD.format(a='q.qv', b='s.v')} AS d2
+                   {duck_sqd('q.qv', 's.v')} AS d2
             FROM q, e s WHERE s.vec_id <> q.query_id),
         tr AS (
             SELECT query_id, node AS true_nn FROM (
@@ -3375,7 +3315,7 @@ def graph_ann_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nearest = ["d2", "node"]
     s0 = q.join(F.broadcast(seeds), F.expr("node <> query_id")).selectExpr(
-        "query_id", "node", f"{_SQD.format(a='qv', b='nv')} AS d2"
+        "query_id", "node", f"{sqd('qv', 'nv')} AS d2"
     )
     beam = top_k_per_group(s0, ["query_id"], nearest, _GB_B, rank="rank")
     qv = q.select("query_id", "qv")
@@ -3402,13 +3342,13 @@ def graph_ann_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
             cand.join(F.broadcast(qv), "query_id")
             .join(F.broadcast(ev), "node")
             .selectExpr(
-                "query_id", "node", f"{_SQD.format(a='qv', b='nv')} AS d2"
+                "query_id", "node", f"{sqd('qv', 'nv')} AS d2"
             )
         )
         beam = top_k_per_group(scored, ["query_id"], nearest, _GB_B, rank="rank")
     truth = top_k_per_group(
         q.join(F.broadcast(ev), F.expr("node <> query_id")).selectExpr(
-            "query_id", "node", f"{_SQD.format(a='qv', b='nv')} AS d2"
+            "query_id", "node", f"{sqd('qv', 'nv')} AS d2"
         ),
         ["query_id"], nearest, 1,
     ).selectExpr("query_id", "node AS true_nn")
@@ -3451,7 +3391,7 @@ def _ivfpq_oracle_ctes(train_where: str = "") -> str:
             SELECT tr.vec_id, tr.v, t.ccid
             FROM tr JOIN LATERAL (
               SELECT c.ccid FROM cc c
-              ORDER BY {_D_SQD.format(a='tr.v', b='c.ccv')}, c.ccid
+              ORDER BY {duck_sqd('tr.v', 'c.ccv')}, c.ccid
               LIMIT 1) t ON true),
         ca AS (
             SELECT a.vec_id, a.ccid,
@@ -3467,7 +3407,7 @@ def _ivfpq_oracle_ctes(train_where: str = "") -> str:
             SELECT s.vec_id, s.m, s.rv, t.cid
             FROM sub s JOIN LATERAL (
               SELECT c.cid FROM seeds c WHERE c.m = s.m
-              ORDER BY {_D_SQD.format(a='s.rv', b='c.cv')}, c.cid
+              ORDER BY {duck_sqd('s.rv', 'c.cv')}, c.cid
               LIMIT 1) t ON true),
         cent1 AS (
             SELECT m, cid, d.dim,
@@ -3485,7 +3425,7 @@ def _ivfpq_oracle_ctes(train_where: str = "") -> str:
             SELECT s.vec_id, s.m, t.cid
             FROM sub s JOIN LATERAL (
               SELECT c.cid FROM cb c WHERE c.m = s.m
-              ORDER BY {_D_SQD.format(a='s.rv', b='c.cv')}, c.cid
+              ORDER BY {duck_sqd('s.rv', 'c.cv')}, c.cid
               LIMIT 1) t ON true)"""
 
 
@@ -3530,14 +3470,7 @@ def _ivfpq_artifacts(
     # top-1 coarse assignment: bounded fold over the broadcast 8-cell
     # codebook (the pq_adc_topk assign idiom, full-width vectors)
     cc_arr = cc.groupBy().agg(F.collect_list(F.struct("ccid", "ccv")).alias("cs"))
-    best = (
-        f"aggregate(transform(cs, c -> named_struct("
-        f"'d2', {_SQD.format(a='v', b='c.ccv')}, 'ccid', c.ccid)), "
-        "named_struct('d2', CAST('Infinity' AS DOUBLE), "
-        "'ccid', CAST(-1 AS BIGINT)), "
-        "(acc, s) -> IF(s.d2 < acc.d2"
-        " OR (s.d2 = acc.d2 AND s.ccid < acc.ccid), s, acc))"
-    )
+    best = nearest("cs", "v", "ccv", "ccid")
     ca = (
         tr.join(F.broadcast(cc_arr), F.lit(True))
         .selectExpr("vec_id", "v", f"{best}.ccid AS ccid")
@@ -3560,14 +3493,7 @@ def _ivfpq_artifacts(
         cent_arr = cents.groupBy("m").agg(
             F.collect_list(F.struct("cid", "cv")).alias("cs")
         )
-        scored = (
-            f"aggregate(transform(cs, c -> named_struct("
-            f"'d2', {_SQD.format(a='rv', b='c.cv')}, 'cid', c.cid)), "
-            "named_struct('d2', CAST('Infinity' AS DOUBLE), "
-            "'cid', CAST(-1 AS BIGINT)), "
-            "(acc, s) -> IF(s.d2 < acc.d2"
-            " OR (s.d2 = acc.d2 AND s.cid < acc.cid), s, acc))"
-        )
+        scored = nearest("cs", "rv")
         return (
             points.join(F.broadcast(cent_arr), "m")
             .selectExpr("vec_id", "m", "ccid", "rv", f"{scored}.cid AS cid")
@@ -3639,7 +3565,7 @@ def _ivfpq_artifacts(
             SELECT e.vec_id AS query_id, e.v, t.ccid
             FROM e JOIN LATERAL (
               SELECT c.ccid FROM cc c
-              ORDER BY {_D_SQD.format(a='e.v', b='c.ccv')}, c.ccid
+              ORDER BY {duck_sqd('e.v', 'c.ccv')}, c.ccid
               LIMIT {_IVFPQ_PROBE}) t ON true
             WHERE e.vec_id >= {_IVFPQ_QLO} AND e.vec_id < {_IVFPQ_QHI}),
         qp AS (
@@ -3653,7 +3579,7 @@ def _ivfpq_artifacts(
             FROM qp, (SELECT unnest(range(0, 4)) AS m) m),
         lut AS (
             SELECT s.query_id, s.ccid, s.m, c.cid,
-                   {_D_SQD.format(a='s.qv', b='c.cv')} AS d2
+                   {duck_sqd('s.qv', 'c.cv')} AS d2
             FROM qsub s JOIN cb c ON s.m = c.m),
         adc AS (
             SELECT l.query_id, c.vec_id AS neighbor_id,
@@ -3688,7 +3614,7 @@ def ann_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cc), F.lit(True))
         .selectExpr(
             "query_id", "v", "ccid", "ccv",
-            f"{_SQD.format(a='v', b='ccv')} AS cd2",
+            f"{sqd('v', 'ccv')} AS cd2",
         ),
         ["query_id"], ["cd2", "ccid"], _IVFPQ_PROBE,
     ).selectExpr(
@@ -3704,7 +3630,7 @@ def ann_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(cent1.withColumnRenamed("cv", "cbv")), "m"
     ).selectExpr(
         "query_id", "ccid", "m", "cid",
-        f"{_SQD.format(a='qv', b='cbv')} AS d2",
+        f"{sqd('qv', 'cbv')} AS d2",
     )
     adc = (
         codes.join(F.broadcast(lut), ["m", "cid", "ccid"])
@@ -3745,7 +3671,7 @@ _IVFPQ_NPROBES = (1, 2, 4)
         WITH {_IVFPQ_ORACLE_CTES},
         qc AS (
             SELECT q.vec_id AS query_id, q.v, c.ccid, c.ccv,
-                   {_D_SQD.format(a='q.v', b='c.ccv')} AS cd2
+                   {duck_sqd('q.v', 'c.ccv')} AS cd2
             FROM e q, cc c
             WHERE q.vec_id >= {_IVFPQ_QLO} AND q.vec_id < {_IVFPQ_QHI}),
         qp0 AS (
@@ -3764,7 +3690,7 @@ _IVFPQ_NPROBES = (1, 2, 4)
             FROM qp, (SELECT unnest(range(0, 4)) AS m) m),
         lut AS (
             SELECT s.query_id, s.ccid, s.prn, s.m, c.cid,
-                   {_D_SQD.format(a='s.qv', b='c.cv')} AS d2
+                   {duck_sqd('s.qv', 'c.cv')} AS d2
             FROM qsub s JOIN cb c ON s.m = c.m),
         adc AS (
             SELECT l.query_id, l.prn AS cell_prn, c.vec_id AS neighbor_id,
@@ -3787,7 +3713,7 @@ _IVFPQ_NPROBES = (1, 2, 4)
         exact AS (
             SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
                    row_number() OVER (PARTITION BY q.vec_id
-                       ORDER BY {_D_SQD.format(a='q.v', b='x.v')}, x.vec_id)
+                       ORDER BY {duck_sqd('q.v', 'x.v')}, x.vec_id)
                        AS rank
             FROM e q JOIN e x ON q.vec_id <> x.vec_id
             WHERE q.vec_id >= {_IVFPQ_QLO} AND q.vec_id < {_IVFPQ_QHI})
@@ -3818,7 +3744,7 @@ def ivfpq_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cc), F.lit(True))
         .selectExpr(
             "query_id", "v", "ccid", "ccv",
-            f"{_SQD.format(a='v', b='ccv')} AS cd2",
+            f"{sqd('v', 'ccv')} AS cd2",
         ),
         ["query_id"], ["cd2", "ccid"], maxp, rank="prn",
     ).selectExpr(
@@ -3835,7 +3761,7 @@ def ivfpq_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(cent1.withColumnRenamed("cv", "cbv")), "m"
     ).selectExpr(
         "query_id", "ccid", "prn", "m", "cid",
-        f"{_SQD.format(a='qv', b='cbv')} AS d2",
+        f"{sqd('qv', 'cbv')} AS d2",
     )
     # ONE ADC pass at the widest probe depth, carrying each probed
     # cell's rank; every narrower nprobe is a filter over it.
@@ -3867,7 +3793,7 @@ def ivfpq_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "query_id",
             "vec_id AS neighbor_id",
-            f"{_SQD.format(a='qv', b='v')} AS d2",
+            f"{sqd('qv', 'v')} AS d2",
         ),
         ["query_id"], ["d2", "neighbor_id"], 5,
     ).select("query_id", "neighbor_id")
@@ -3920,7 +3846,7 @@ _IVFPQ_NEW_MOD, _IVFPQ_NEW_REM = 10, 9  # arrival batch: vec_id % 10 == 9
             SELECT e.vec_id AS query_id, e.v, t.ccid
             FROM e JOIN LATERAL (
               SELECT c.ccid FROM cc c
-              ORDER BY {_D_SQD.format(a='e.v', b='c.ccv')}, c.ccid
+              ORDER BY {duck_sqd('e.v', 'c.ccv')}, c.ccid
               LIMIT {_IVFPQ_PROBE}) t ON true
             WHERE e.vec_id % {_IVFPQ_NEW_MOD} = {_IVFPQ_NEW_REM}),
         qp AS (
@@ -3934,7 +3860,7 @@ _IVFPQ_NEW_MOD, _IVFPQ_NEW_REM = 10, 9  # arrival batch: vec_id % 10 == 9
             FROM qp, (SELECT unnest(range(0, 4)) AS m) m),
         lut AS (
             SELECT s.query_id, s.ccid, s.m, c.cid,
-                   {_D_SQD.format(a='s.qv', b='c.cv')} AS d2
+                   {duck_sqd('s.qv', 'c.cv')} AS d2
             FROM qsub s JOIN cb c ON s.m = c.m),
         adc AS (
             SELECT l.query_id, c.vec_id AS neighbor_id,
@@ -3969,7 +3895,7 @@ def ivfpq_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cc), F.lit(True))
         .selectExpr(
             "query_id", "v", "ccid", "ccv",
-            f"{_SQD.format(a='v', b='ccv')} AS cd2",
+            f"{sqd('v', 'ccv')} AS cd2",
         ),
         ["query_id"], ["cd2", "ccid"], _IVFPQ_PROBE,
     ).selectExpr(
@@ -3985,7 +3911,7 @@ def ivfpq_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(cent1.withColumnRenamed("cv", "cbv")), "m"
     ).selectExpr(
         "query_id", "ccid", "m", "cid",
-        f"{_SQD.format(a='qv', b='cbv')} AS d2",
+        f"{sqd('qv', 'cbv')} AS d2",
     )
     # no self-exclusion filter: queries are OUTSIDE the indexed corpus
     adc = (
