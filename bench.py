@@ -202,8 +202,8 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     reg = registry()
-    # Debug subset: SPARK_GRAFT_ONLY="q1,q2" times just those queries
-    # (artifact layout unchanged). Never set by the driver.
+    # Debug subset: SPARK_GRAFT_ONLY="q1,q2" times just those queries and
+    # prints the same line, but writes no BENCH_LOCAL file.
     only = os.environ.get("SPARK_GRAFT_ONLY")
     if only:
         names = [n.strip() for n in only.split(",") if n.strip()]
@@ -434,7 +434,10 @@ def main() -> int:
     if errors:
         full["errors"] = errors
     local_path = Path(__file__).resolve().parent / f"BENCH_LOCAL_r{rnd:02d}.json"
-    local_path.write_text(json.dumps(full, indent=1, sort_keys=True) + "\n")
+    # A subset run must not replace the round's full map, which is also
+    # the next full run's drift reference (_previous_local_timings).
+    if not only:
+        local_path.write_text(json.dumps(full, indent=1, sort_keys=True) + "\n")
 
     base = _baseline_rows(sf)
     ratios = {
@@ -460,7 +463,8 @@ def main() -> int:
         "sf": sf,
         "n_queries": len(timings),
         "cpus": int(cpus),
-        "queries_note": f"12 slowest of {len(timings)}; full map in {local_path.name}",
+        "queries_note": f"12 slowest of {len(timings)}; "
+        + ("subset run, no full map written" if only else f"full map in {local_path.name}"),
         "worst_vs_baseline": worst,
         "n_over_2x_baseline": len(over_gate),
         "sum_vs_baseline": round(

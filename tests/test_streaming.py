@@ -801,12 +801,55 @@ def test_top_k_idioms_stay_in_their_helper():
         "similarity.opq_variance_balanced_pq",  # ranks the whole dim domain
     }
     assert _owners(pkg / "queries" / "retrieval.py", row_number) == {
-        "retrieval.zipf_exponent_fit",  # banded global rank
-        "retrieval.vocab_coverage_curve",  # banded global rank
         "retrieval.rake_keyphrases",  # gaps-and-islands pos - row_number
         "retrieval.mrr_retrieval_eval",  # first relevant rank can pass any k
         "retrieval.loso_source_influence",  # measured faster than the k = 1 reduction
     }
+
+
+def test_global_rank_idioms_stay_in_their_helper():
+    """The band-offset prefix join of a global rank (a left join to a
+    broadcast band-size table on ``F.col(...) < F.col(...)`` or ``>``)
+    lives in topk.global_rank, and ntile's bucket arithmetic (a floor of
+    a division by ``s + 1``) in topk.ntile."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "uk_procurement_data_pipeline_spark"
+
+    def is_call(n, attr):
+        return isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and n.func.attr == attr
+
+    def col_order(n):
+        return (
+            isinstance(n, ast.Compare)
+            and isinstance(n.ops[0], (ast.Lt, ast.Gt))
+            and is_call(n.left, "col")
+            and is_call(n.comparators[0], "col")
+        )
+
+    def prefix_join(n):
+        if not is_call(n, "join") or len(n.args) < 2 or not is_call(n.args[0], "broadcast"):
+            return False
+        how = [*n.args[2:3], *(k.value for k in n.keywords if k.arg == "how")]
+        left = any(isinstance(h, ast.Constant) and h.value == "left" for h in how)
+        return left and any(col_order(c) for c in ast.walk(n.args[1]))
+
+    def ntile_arithmetic(n):
+        return (
+            is_call(n, "floor")
+            and bool(n.args)
+            and isinstance(n.args[0], ast.BinOp)
+            and isinstance(n.args[0].op, ast.Div)
+            and isinstance(n.args[0].right, ast.BinOp)
+            and isinstance(n.args[0].right.op, ast.Add)
+            and isinstance(n.args[0].right.right, ast.Constant)
+            and n.args[0].right.right.value == 1
+        )
+
+    modules = list(pkg.rglob("*.py"))
+    assert set().union(*(_owners(p, prefix_join) for p in modules)) == {"topk.global_rank"}
+    assert set().union(*(_owners(p, ntile_arithmetic) for p in modules)) == {"topk.ntile"}
 
 
 def test_vector_algebra_stays_in_vec():

@@ -1,8 +1,8 @@
-"""top_k_per_group against DuckDB's ``row_number() OVER (... ORDER BY ...)``
-on random frames with NULL, NaN, ±inf and ±0.0 in the order columns and
-ties on the leading key. DuckDB reads the frame through Arrow: its pandas
-scan reads a NaN produced by ``toPandas()`` as NULL, which would hide the
-very cases this test exists for."""
+"""top_k_per_group and global_rank against DuckDB's ``row_number() OVER
+(... ORDER BY ...)`` on random frames with NULL, NaN, ±inf and ±0.0 in the
+order columns and ties on the leading key. DuckDB reads the frame through
+Arrow: its pandas scan reads a NaN produced by ``toPandas()`` as NULL,
+which would hide the very cases this test exists for."""
 
 from __future__ import annotations
 
@@ -17,7 +17,7 @@ import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from uk_procurement_data_pipeline_spark.functions.topk import top_k_per_group
+from uk_procurement_data_pipeline_spark.functions.topk import global_rank, top_k_per_group
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
@@ -98,6 +98,68 @@ def test_top_k_per_group_matches_duckdb_order_by(spark, k):
         assert _canon(got.collect()) == _canon(want), (keys, order)
 
     check()
+
+
+_RANK_SCHEMA = "g1 int, x double, n bigint, s string, w int, id bigint"
+# No NULL in a leading term (out of global_rank's contract); NULL keys are in.
+_RANK_ROW = st.tuples(
+    st.sampled_from([None, 0, 1]),
+    st.sampled_from([_NAN, _INF, -_INF, 0.0, -0.0, 1.5, -2.25, 3.0]),
+    st.sampled_from([-(2**63), -1, 0, 7, 2**63 - 1]),
+    st.sampled_from(["", "a", "b"]),
+    st.integers(-3, 5),
+)
+
+
+def _duckdb_global_rank(rows, keys, order):
+    cols = list(zip(*rows)) if rows else [[]] * 6
+    frame = pa.table(
+        {
+            "g1": pa.array(cols[0], pa.int32()),
+            "x": pa.array(cols[1], pa.float64()),
+            "n": pa.array(cols[2], pa.int64()),
+            "s": pa.array(cols[3], pa.string()),
+            "w": pa.array(cols[4], pa.int32()),
+            "id": pa.array(cols[5], pa.int64()),
+        }
+    )
+    part = f"PARTITION BY {', '.join(keys)}" if keys else ""
+    over = f"{part} ORDER BY {', '.join(order)}"
+    con = duckdb.connect()
+    try:
+        con.register("frame", frame)
+        return con.sql(
+            f"SELECT *, row_number() OVER ({over}) AS rn,"
+            f" SUM(w) OVER ({over} ROWS UNBOUNDED PRECEDING) AS cum,"
+            f" count(*) OVER ({part}) AS size FROM frame"
+        ).fetchall()
+    finally:
+        con.close()
+
+
+@settings(max_examples=30, deadline=None, derandomize=True, database=None)
+@given(
+    st.lists(_RANK_ROW, max_size=30),
+    st.sampled_from([[], ["g1"]]),
+    st.sampled_from(["x", "n", "s"]),
+    st.booleans(),
+    st.sampled_from([None, 2, 3]),
+)
+@example([(0, _NAN, 0, "a", 1), (0, _INF, 0, "a", 2), (0, 1.5, 0, "a", 3)], [], "x", False, 2)
+@example([(0, _NAN, 0, "a", 1), (0, _INF, 0, "a", 2), (1, -_INF, 0, "a", 3)], ["g1"], "x", True, 3)
+@example([], [], "x", False, 2)
+def test_global_rank_matches_duckdb_row_number(spark, rows, keys, lead, desc, width):
+    """Rank, running sum and group size equal DuckDB's row_number, ROWS
+    UNBOUNDED PRECEDING sum and count over (PARTITION BY keys ORDER BY
+    lead, id), banded by the term itself or by floor(term / width)."""
+    width = None if lead == "s" else width
+    order = [f"{lead} DESC" if desc else lead, "id"]
+    rows = [(*r, i) for i, r in enumerate(rows)]
+    df = spark.createDataFrame(rows, _RANK_SCHEMA)
+    got = global_rank(df, order, keys=keys, width=width, running={"cum": "w"}, size="size")
+    assert got.columns == [*df.columns, "rn", "cum", "size"]
+    want = _duckdb_global_rank(rows, keys, order)
+    assert _canon(got.collect()) == _canon(want), (keys, order, width)
 
 
 def test_top_1_reduces_without_a_window_unless_a_desc_term_has_no_negation(spark):
@@ -201,6 +263,42 @@ def test_cosine_queries_match_oracle_on_zero_vectors(spark, zero_vector_dir, nam
     con = duckdb_conn(zero_vector_dir)
     try:
         ok, msg, _ = check_one(spark, con, registry()[name], zero_vector_dir)
+    finally:
+        con.close()
+    assert ok, msg
+
+
+def _nan_value_copy(sf_dir, tmp_path):
+    """``sf_dir`` in ``tmp_path`` with ``events.value`` of event_id 0 (an
+    ``error`` event) NaN and every other table symlinked."""
+    for f in Path(sf_dir).iterdir():
+        if f.name != "events.parquet":
+            (tmp_path / f.name).symlink_to(f)
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    ids = ev.column("event_id").to_pylist()
+    assert 0 in ids
+    vals = [_NAN if i == 0 else v for i, v in zip(ids, ev.column("value").to_pylist())]
+    col = ev.schema.get_field_index("value")
+    pq.write_table(
+        ev.set_column(col, ev.schema.field(col), pa.array(vals, ev.schema.field(col).type)),
+        tmp_path / "events.parquet",
+    )
+    return tmp_path
+
+
+def test_banded_percentiles_match_oracle_on_a_nan_value(spark, sf_dir, tmp_path):
+    """Spark's floor(NaN) is 0 under ANSI, while NaN sorts above every
+    number: a band taken from floor(value) would rank the NaN row in band
+    0 and shift every other rank of its type by one. global_rank puts it
+    in the top band."""
+    from oracle_check import check_one, duckdb_conn
+
+    from uk_procurement_data_pipeline_spark.queries import registry
+
+    nan_dir = str(_nan_value_copy(sf_dir, tmp_path))
+    con = duckdb_conn(nan_dir)
+    try:
+        ok, msg, _ = check_one(spark, con, registry()["percentiles_per_type_banded"], nan_dir)
     finally:
         con.close()
     assert ok, msg

@@ -1,5 +1,7 @@
-"""Top-k rows per group: the engine's one spelling of "first match by
-key", keyed de-duplication and per-query top-k retrieval.
+"""Top-k rows per group and the global rank: the engine's one spelling
+of "first match by key", keyed de-duplication and per-query top-k
+retrieval, and of a rank (with running sums) over a whole input that no
+single task sorts.
 
 Ordering contract (the DuckDB oracle's ``ORDER BY`` defaults):
 
@@ -58,23 +60,138 @@ def top_k_per_group(
     the 1-based position as an int column named ``rank`` when given.
     ``keys=[]`` ranks the whole input as one group; an empty input gives
     no rows."""
-    terms = []
-    for t in order:
-        name, _, direction = t.partition(" ")
-        terms.append((name, direction.strip().upper() == "DESC"))
+    terms = _terms(order)
     key = _reduction_key(df, terms) if k == 1 and keys else None
     if key is not None:
         rest = [c for c in df.columns if c not in keys]
         best = df.groupBy(*keys).agg(F.min_by(F.struct(*rest), key).alias("_top"))
         cols = [F.col(c) if c in keys else F.col("_top")[c].alias(c) for c in df.columns]
         return best.select(*cols, *([F.lit(1).alias(rank)] if rank else []))
-    sort = [
+    w = Window.partitionBy(*keys).orderBy(*_sort(terms))
+    out = df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= k)
+    return out.withColumnRenamed("_rn", rank) if rank else out.drop("_rn")
+
+
+def global_rank(
+    df: DataFrame,
+    order: Sequence[str],
+    *,
+    keys: Sequence[str] = (),
+    width: float | None = None,
+    rank: str = "rn",
+    running: dict[str, str] | None = None,
+    size: str | None = None,
+) -> DataFrame:
+    """``df`` plus the 1-based ``rank`` of each row within its ``keys``
+    group: ``row_number() OVER (PARTITION BY keys ORDER BY order)`` under
+    the module's contract, with no group sorted in one task.
+
+    The leading order term picks a band: the term itself when ``width``
+    is None (counts, string keys), else ``floor(term / width)``. Rows are
+    ranked by a window partitioned by (keys, band), and each band's
+    offset is the row count of the bands before it, summed over a prefix
+    join of the band-size table (one row per band, broadcast; a window
+    over it would be unpartitioned). So the band domain must be small,
+    and the band monotone in the term: a NaN term goes to the top band
+    (Spark's ``floor(NaN)`` is 0 under ANSI mode), and ``floor`` of
+    +/-inf clamps to the extreme longs. A NULL leading term is out of
+    contract; NULL keys group together, as in DuckDB.
+
+    ``running={"out": "col"}`` adds the inclusive running sum of each
+    integral ``col`` along the same order as ``out``; ``size`` names a
+    column with the group's row count. The helper owns the column name
+    ``band``. Of the callers,
+    ``equidepth_value_bins`` and ``winsorized_stats_per_type`` take no
+    NaN value: their DuckDB oracles raise on the exact decimal sum of one.
+    """
+    running = running or {}
+    terms = _terms(order)
+    lead, desc = terms[0]
+    band = F.col(lead)
+    if width is not None:
+        if isinstance(df.schema[lead].dataType, (FloatType, DoubleType)):
+            band = F.when(F.isnan(band), F.lit(float("inf"))).otherwise(band)
+        band = F.floor(band / width)
+    d = df.withColumn("band", band)
+    sizes = d.groupBy(*keys, "band").agg(
+        F.count(F.lit(1)).alias("_n"),
+        *(F.sum(c).alias(f"_s_{out}") for out, c in running.items()),
+    )
+    sums = ["_n", *(f"_s_{out}" for out in running)]
+    lo = sizes.select(*(F.col(c).alias(f"_l{c}") for c in [*keys, "band", *sums]))
+    offsets = (
+        sizes.join(
+            F.broadcast(lo),
+            [
+                *(F.col(f"_l{k}").eqNullSafe(F.col(k)) for k in keys),
+                F.col("_lband") > F.col("band") if desc else F.col("_lband") < F.col("band"),
+            ],
+            "left",
+        )
+        .groupBy(*(F.col(c).alias(f"_j{c}") for c in [*keys, "band"]))
+        .agg(*(F.coalesce(F.sum(f"_l{c}"), F.lit(0)).alias(f"_o{c}") for c in sums))
+    )
+    # In-band row number and running sums, under the names the band
+    # totals have in ``sizes``; adding the ``_o`` offset of each makes it
+    # global.
+    w = Window.partitionBy(*keys, "band").orderBy(*_sort(terms))
+    upto = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    names = df.columns
+    out = (
+        d.select(
+            "*",
+            F.row_number().over(w).alias("_n"),
+            *(F.sum(c).over(upto).alias(f"_s_{o}") for o, c in running.items()),
+        )
+        .join(F.broadcast(offsets), [*_same(keys), F.col("band") == F.col("_jband")])
+        .select(
+            *names,
+            *((F.col(f"_o{c}") + F.col(c)).alias(o) for o, c in zip([rank, *running], sums)),
+        )
+    )
+    if size is None:
+        return out
+    # Counted from the input: a sum over ``sizes`` measured slower, as
+    # Spark re-runs the band-size shuffle for it instead of reusing it.
+    total = d.groupBy(*(F.col(k).alias(f"_j{k}") for k in keys)).agg(F.count(F.lit(1)).alias(size))
+    return out.join(F.broadcast(total), _same(keys) or None).select(*names, rank, *running, size)
+
+
+def ntile(rn: Column, n: Column, b: int) -> Column:
+    """``ntile(b)``'s bucket (an int in 1..b) of the row ranked ``rn`` of
+    ``n``: buckets of ``n div b`` rows, the first ``n mod b`` of them one
+    row larger. Paired with ``global_rank`` it keeps the plan free of the
+    builtin, whose window is unpartitioned."""
+    s, r = F.floor(n / b), n % b
+    head = r * (s + 1)  # rows in the first r (larger) buckets
+    return (
+        F.when(rn <= head, F.floor((rn - 1) / (s + 1)) + 1)
+        .otherwise(r + F.floor((rn - head - 1) / s) + 1)
+        .cast("int")
+    )
+
+
+def _same(keys: Sequence[str]) -> list[Column]:
+    """Each key equal to its ``_j`` copy, NULL equal to NULL (as PARTITION
+    BY groups it)."""
+    return [F.col(k).eqNullSafe(F.col(f"_j{k}")) for k in keys]
+
+
+def _terms(order: Sequence[str]) -> list[tuple[str, bool]]:
+    """``order``'s terms as (column, is DESC) pairs."""
+    terms = []
+    for t in order:
+        name, _, direction = t.partition(" ")
+        terms.append((name, direction.strip().upper() == "DESC"))
+    return terms
+
+
+def _sort(terms: list[tuple[str, bool]]) -> list[Column]:
+    """Window sort columns for ``terms`` with NULL last in both directions."""
+    return [
         F.col(c).desc_nulls_last() if desc else F.col(c).asc_nulls_last()
         for c, desc in terms
     ]
-    w = Window.partitionBy(*keys).orderBy(*sort)
-    out = df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= k)
-    return out.withColumnRenamed("_rn", rank) if rank else out.drop("_rn")
 
 
 def _reduction_key(df: DataFrame, terms: list[tuple[str, bool]]) -> Column | None:

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (parity with siblings)
 
 from uk_procurement_data_pipeline_spark.catalog import load, local_table
+from uk_procurement_data_pipeline_spark.functions.topk import global_rank
 from uk_procurement_data_pipeline_spark.queries.base import register
 
 _TOKENS = "split(text, ' ')"  # Spark tokens
@@ -576,8 +577,9 @@ _MIN_FREQ = 5  # vocabulary admission threshold (corpus frequency)
     "then every document is re-encoded as its id sequence with OOV -> "
     "-1, preserving token order (','-joined to a string — query "
     "outputs never carry array columns). The global rank is computed WITHOUT a "
-    "single-partition sort: row_number partitioned by freq (word is the "
-    "tiebreak within a freq class), plus per-freq-class offsets from a "
+    "single-partition sort by topk.global_rank: row_number partitioned "
+    "by freq (word is the tiebreak within a freq class), plus "
+    "per-freq-class offsets from a "
     "broadcast theta-join over the distinct-freq table — a multi-"
     "million-word vocab ranks in parallel across freq classes. The "
     "vocab is small by construction (frequency-thresholded) so the "
@@ -607,33 +609,17 @@ _MIN_FREQ = 5  # vocabulary admission threshold (corpus frequency)
     """,
 )
 def vocab_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     pos = (
         load(spark, sf_dir, "documents")
         .selectExpr("doc_id", "posexplode(split(text, ' ')) AS (pos, word)")
     )
     wc = pos.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
     admitted = wc.where(F.col("freq") >= _MIN_FREQ)
-    # Scale-safe global rank by (freq DESC, word): rank words WITHIN each
-    # freq class (a partitioned window — parallel across classes), then add
-    # the number of words in all strictly-higher freq classes. The offset
-    # table has one row per distinct frequency (Zipfian corpora: tiny), so
-    # the strictly-greater join broadcasts; no unpartitioned WindowExec
-    # funnels the whole vocabulary through one task (VERDICT r03 item 4).
-    rk = admitted.withColumn(
-        "rk", F.row_number().over(Window.partitionBy("freq").orderBy("word"))
-    )
-    sizes = admitted.groupBy("freq").agg(F.count(F.lit(1)).alias("n"))
-    hi = sizes.select(F.col("freq").alias("hfreq"), F.col("n").alias("hn"))
-    offsets = (
-        sizes.join(F.broadcast(hi), F.col("hfreq") > F.col("freq"), "left")
-        .groupBy("freq")
-        .agg(F.coalesce(F.sum("hn"), F.lit(0)).alias("off"))
-    )
-    vocab = (
-        rk.join(F.broadcast(offsets), "freq")
-        .select("word", (F.col("off") + F.col("rk") - 1).alias("id"))
+    # Scale-safe global rank by (freq DESC, word): the band is the freq
+    # class (Zipfian corpora: few), so no unpartitioned WindowExec funnels
+    # the whole vocabulary through one task (VERDICT r03 item 4).
+    vocab = global_rank(admitted, ["freq DESC", "word"], rank="rk").select(
+        "word", (F.col("rk") - 1).alias("id")
     )
     return (
         pos.join(F.broadcast(vocab), "word", "left")

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from uk_procurement_data_pipeline_spark.catalog import load, local_table, spread
+from uk_procurement_data_pipeline_spark.functions.topk import global_rank
 from uk_procurement_data_pipeline_spark.functions.vec import cosine, duck_dot, norm
 from uk_procurement_data_pipeline_spark.queries.base import register
 
@@ -1742,7 +1743,7 @@ _SNM_KEYS = {
     "nothing quadratic materializes. The global sort rank is computed "
     "SCALE-SAFELY: rank within each key class (partitioned window), "
     "then offset by the broadcast count of strictly-smaller keys — "
-    "the vocab_encode_docs idiom, no unpartitioned WindowExec; the "
+    "topk.global_rank, no unpartitioned WindowExec; the "
     "window join is the rank + d equi-join for d in 1..w. Pair order "
     "is normalized (ca < cb) so multi-pass set algebra is exact.",
     oracle=f"""
@@ -1812,8 +1813,6 @@ _SNM_KEYS = {
     """,
 )
 def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     cust = load(spark, sf_dir, "customer").selectExpr(
         "c_custkey",
         "c_nationkey",
@@ -1822,31 +1821,6 @@ def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{_SNM_KEYS['bal_band'][0]} AS k2",
     ).localCheckpoint(eager=True)  # 2 rank passes + total count
     tot = cust.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-
-    def ranked(kcol: str) -> DataFrame:
-        # Scale-safe global rank by (key, custkey): partitioned rank
-        # within each key class + broadcast offset of smaller classes.
-        rk = cust.withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy(kcol).orderBy("c_custkey")
-            ),
-        )
-        sizes = cust.groupBy(kcol).agg(F.count(F.lit(1)).alias("kn"))
-        hi = sizes.select(
-            F.col(kcol).alias("hk"), F.col("kn").alias("hn")
-        )
-        offsets = (
-            sizes.join(F.broadcast(hi), F.col("hk") < F.col(kcol), "left")
-            .groupBy(kcol)
-            .agg(F.coalesce(F.sum("hn"), F.lit(0)).alias("off"))
-        )
-        return rk.join(F.broadcast(offsets), kcol).select(
-            "c_custkey",
-            "c_nationkey",
-            "c_mktsegment",
-            (F.col("off") + F.col("rk")).alias("rn"),
-        )
 
     def pairs(r: DataFrame) -> DataFrame:
         a = r.selectExpr(
@@ -1873,8 +1847,12 @@ def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    p1 = pairs(ranked("k1")).localCheckpoint(eager=True)  # stats + set ops
-    p2 = pairs(ranked("k2")).localCheckpoint(eager=True)
+    # Scale-safe global rank by (key, custkey): the band is the key class.
+    # Each pass feeds both the stats and the set ops, so it is pinned.
+    p1, p2 = (
+        pairs(global_rank(cust, [k, "c_custkey"])).localCheckpoint(eager=True)
+        for k in ("k1", "k2")
+    )
     u = (
         p1.unionByName(p2)
         .groupBy("ca", "cb")

@@ -27,6 +27,7 @@ from uk_procurement_data_pipeline_spark.catalog import (
     load, local_table, probe_events_nanos, read_nanos_events,
 )
 from uk_procurement_data_pipeline_spark.functions.exact import exact_sum, oracle_sum
+from uk_procurement_data_pipeline_spark.functions.topk import global_rank
 from uk_procurement_data_pipeline_spark.queries.base import register
 from uk_procurement_data_pipeline_spark.session import scoped_conf
 from uk_procurement_data_pipeline_spark.streaming.events_stream import EVENTS_DDL
@@ -1830,8 +1831,8 @@ def session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Exact p50/p95 of value per event type WITHOUT sorting any "
     "type's full partition: rank within (type, integer value band) — "
     "parallel across bands even when one type holds billions of rows — "
-    "plus broadcast strictly-lower-band offsets per type (the "
-    "equidepth_value_bins rewrite applied per group), then pick the "
+    "plus broadcast strictly-lower-band offsets per type "
+    "(topk.global_rank keyed by type), then pick the "
     "ceil(p*n) ranks. The oracle keeps the literal per-type "
     "row_number over a full sort, certifying the banded rewrite "
     "against textbook percentile semantics.",
@@ -1855,46 +1856,12 @@ def session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def percentiles_per_type_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     ev = (
         load(spark, sf_dir, "events")
         .where(F.col("value").isNotNull())
-        .select(
-            "event_type",
-            "event_id",
-            "value",
-            F.floor("value").alias("band"),
-        )
+        .select("event_type", "event_id", "value")
     )
-    in_band = F.row_number().over(
-        Window.partitionBy("event_type", "band").orderBy("value", "event_id")
-    )
-    sizes = ev.groupBy("event_type", "band").agg(
-        F.count(F.lit(1)).alias("bn")
-    )
-    lo = sizes.select(
-        F.col("event_type").alias("lt"),
-        F.col("band").alias("lband"),
-        F.col("bn").alias("ln"),
-    )
-    offsets = (
-        sizes.join(
-            F.broadcast(lo),
-            (F.col("lt") == F.col("event_type"))
-            & (F.col("lband") < F.col("band")),
-            "left",
-        )
-        .groupBy("event_type", "band")
-        .agg(F.coalesce(F.sum("ln"), F.lit(0)).alias("off"))
-    )
-    n = ev.groupBy("event_type").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    ranked = (
-        ev.withColumn("rk", in_band)
-        .join(F.broadcast(offsets), ["event_type", "band"])
-        .join(F.broadcast(n), "event_type")
-        .withColumn("rn", F.col("off") + F.col("rk"))
-    )
+    ranked = global_rank(ev, ["value", "event_id"], keys=["event_type"], width=1, size="n")
     r50 = F.expr("(n + 1) div 2")
     r95 = F.expr("(19 * n + 19) div 20")
     return (
@@ -2586,9 +2553,10 @@ def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Winsorized (5%/95%-clipped) value statistics per event type - "
     "the robust-mean preprocessing step run before feeding heavy-"
     "tailed metrics to a model: exact p05/p95 thresholds via the "
-    "banded global-rank construction (percentiles_per_type_banded's "
-    "rewrite - rank within (type, integer band) plus broadcast "
-    "lower-band offsets, so no type ever sorts in one task), values "
+    "banded global rank (topk.global_rank keyed by type, as in "
+    "percentiles_per_type_banded - rank within (type, integer band) "
+    "plus broadcast lower-band offsets, so no type ever sorts in one "
+    "task), values "
     "clipped with greatest/least, and raw vs winsorized means as "
     "exact decimal sums. The oracle certifies against the textbook "
     "full-sort percentile definition.",
@@ -2629,42 +2597,14 @@ def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def winsorized_stats_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from uk_procurement_data_pipeline_spark.functions.exact import dec
 
     ev = (
         load(spark, sf_dir, "events")
         .where(F.col("value").isNotNull())
-        .select(
-            "event_type", "event_id", "value", F.floor("value").alias("band")
-        )
+        .select("event_type", "event_id", "value")
     )
-    in_band = F.row_number().over(
-        Window.partitionBy("event_type", "band").orderBy("value", "event_id")
-    )
-    sizes = ev.groupBy("event_type", "band").agg(F.count(F.lit(1)).alias("bn"))
-    lo = sizes.select(
-        F.col("event_type").alias("lt"),
-        F.col("band").alias("lband"),
-        F.col("bn").alias("ln"),
-    )
-    offsets = (
-        sizes.join(
-            F.broadcast(lo),
-            (F.col("lt") == F.col("event_type")) & (F.col("lband") < F.col("band")),
-            "left",
-        )
-        .groupBy("event_type", "band")
-        .agg(F.coalesce(F.sum("ln"), F.lit(0)).alias("off"))
-    )
-    n = ev.groupBy("event_type").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    ranked = (
-        ev.withColumn("rk", in_band)
-        .join(F.broadcast(offsets), ["event_type", "band"])
-        .join(F.broadcast(n), "event_type")
-        .withColumn("rn", F.col("off") + F.col("rk"))
-    )
+    ranked = global_rank(ev, ["value", "event_id"], keys=["event_type"], width=1, size="n")
     thr = ranked.groupBy("event_type").agg(
         F.max(F.when(F.col("rn") == F.expr("(n + 19) div 20"), F.col("value"))).alias(
             "p05"

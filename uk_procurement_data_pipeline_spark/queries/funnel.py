@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from uk_procurement_data_pipeline_spark.catalog import load
+from uk_procurement_data_pipeline_spark.functions.topk import global_rank, ntile
 from uk_procurement_data_pipeline_spark.queries.base import register
 
 
@@ -364,8 +365,8 @@ def lorenz_gini_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     "classic marketing rollup: per purchasing customer, days since "
     "last order (vs the corpus max day), order count, and exact-"
     "decimal spend, each scored into terciles with ntile(3) semantics "
-    "— computed WITHOUT an unpartitioned sort via the banded-rank + "
-    "broadcast-offset rewrite that equidepth_value_bins certifies "
+    "— computed WITHOUT an unpartitioned sort via topk.global_rank's "
+    "banded rank + broadcast offsets and topk.ntile "
     "(bands: recency months, raw order counts, spend thousands). "
     "Scores are oriented so 3 is best (r_score inverts recency); the "
     "oracle keeps the literal ntile() windows, certifying the "
@@ -399,8 +400,6 @@ def lorenz_gini_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from uk_procurement_data_pipeline_spark.functions.exact import dec
 
     o = load(spark, sf_dir, "orders").select(
@@ -438,49 +437,16 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    def tercile(df, metric: str, band, out: str):
-        """ntile(3) over (metric, c_custkey) via banded rank + broadcast
-        offsets — the equidepth_value_bins rewrite, no global sort."""
-        d = df.withColumn("band", band)
-        in_band = F.row_number().over(
-            Window.partitionBy("band").orderBy(metric, "c_custkey")
+    x = rfm
+    for metric, width, out in (
+        ("recency_days", 30, "r_t"), ("frequency", None, "f_t"), ("monetary", 1000, "m_t")
+    ):
+        x = global_rank(x, [metric, "c_custkey"], width=width, size="n")
+        x = (
+            x.withColumn(out, ntile(F.col("rn"), F.col("n"), 3))
+            .drop("rn", "n")
+            .localCheckpoint(eager=True)  # 3 consumers in the next pass (r12)
         )
-        sizes = d.groupBy("band").agg(F.count(F.lit(1)).alias("bn"))
-        lo = sizes.select(
-            F.col("band").alias("lband"), F.col("bn").alias("ln")
-        )
-        offsets = (
-            sizes.join(
-                F.broadcast(lo), F.col("lband") < F.col("band"), "left"
-            )
-            .groupBy("band")
-            .agg(F.coalesce(F.sum("ln"), F.lit(0)).alias("off"))
-        )
-        tot = d.agg(F.count(F.lit(1)).alias("n_total"))
-        ranked = (
-            d.withColumn("rk", in_band)
-            .join(F.broadcast(offsets), "band")
-            .join(F.broadcast(tot))
-            .withColumn("rn", F.col("off") + F.col("rk"))
-        )
-        s = F.floor(F.col("n_total") / 3)
-        r = F.col("n_total") % 3
-        head = r * (s + 1)
-        t = (
-            F.when(
-                F.col("rn") <= head,
-                F.floor((F.col("rn") - 1) / (s + 1)) + 1,
-            )
-            .otherwise(r + F.floor((F.col("rn") - head - 1) / s) + 1)
-            .cast("int")
-        )
-        return ranked.withColumn(out, t).drop(
-            "band", "rk", "off", "n_total", "rn"
-        ).localCheckpoint(eager=True)  # 3 consumers in the next pass (r12)
-
-    x = tercile(rfm, "recency_days", F.floor(F.col("recency_days") / 30), "r_t")
-    x = tercile(x, "frequency", F.col("frequency"), "f_t")
-    x = tercile(x, "monetary", F.floor(F.col("monetary") / 1000), "m_t")
     return x.select(
         "c_custkey",
         "recency_days",
@@ -964,7 +930,7 @@ def retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "top-K user set owning >= 80% of all events, reported as a "
     "count and fraction with its actual share (the '80/20' "
     "complement to lorenz_gini_binned's full curve). Users rank by "
-    "(count DESC, user_id) through the banded global-rank rewrite - "
+    "(count DESC, user_id) through topk.global_rank - "
     "rank within each COUNT VALUE band (bounded domain) plus "
     "broadcast higher-band offsets, so no global sort of the user "
     "table - and the crossing test is integer cross-multiplied "
@@ -998,39 +964,13 @@ def retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pareto_8020_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     per_user = (
         load(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    # Banded global rank: the band IS the count value (bounded domain),
-    # ordered DESC; offsets come from strictly higher bands.
-    sizes = per_user.groupBy("c").agg(
-        F.count(F.lit(1)).alias("bn"), F.sum("c").alias("bs")
-    )
-    hi = sizes.select(
-        F.col("c").alias("hc"), F.col("bn").alias("hn"), F.col("bs").alias("hs")
-    )
-    offsets = (
-        sizes.join(F.broadcast(hi), F.col("hc") > F.col("c"), "left")
-        .groupBy("c")
-        .agg(
-            F.coalesce(F.sum("hn"), F.lit(0)).alias("off_n"),
-            F.coalesce(F.sum("hs"), F.lit(0)).alias("off_s"),
-        )
-    )
-    wband = Window.partitionBy("c").orderBy("user_id")
-    ranked = (
-        per_user.join(F.broadcast(offsets), "c")
-        .withColumn("rk", F.col("off_n") + F.row_number().over(wband))
-        .withColumn(
-            "cum",
-            F.col("off_s")
-            + F.sum("c").over(wband.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-    )
+    # The band is the count value itself (bounded domain).
+    ranked = global_rank(per_user, ["c DESC", "user_id"], rank="rk", running={"cum": "c"})
     t = per_user.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users"),
         F.sum("c").cast("bigint").alias("total_events"),

@@ -22,6 +22,7 @@ from uk_procurement_data_pipeline_spark.functions.exact import (
     oracle_avg,
     oracle_sum,
 )
+from uk_procurement_data_pipeline_spark.functions.topk import global_rank
 from uk_procurement_data_pipeline_spark.queries.base import register
 
 _REV_SQL = "l_extendedprice * (1.0 - l_discount)"
@@ -3356,8 +3357,8 @@ _CP_FILE, _CP_BAND, _CP_TARGET = 64, 32, 200_000
     "first_file..last_file). The global prefix sum is computed the "
     "scale-correct way: an intra-band running sum (windows of <= 32 "
     "rows) plus per-band base offsets from the bounded band-total "
-    "table — no unpartitioned window over the file list, the same "
-    "banded-rank construction as vocab_encode_docs. Per bin: file "
+    "table — no unpartitioned window over the file list (topk."
+    "global_rank's running sum). Per bin: file "
     "count, bytes, covered key range, fill ratio vs target.",
     oracle=f"""
         WITH files AS (
@@ -3395,40 +3396,20 @@ _CP_FILE, _CP_BAND, _CP_TARGET = 64, 32, 200_000
     """,
 )
 def compaction_bin_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     files = (
         load(spark, sf_dir, "lineitem")
         .groupBy(
             (F.col("l_orderkey") / _CP_FILE).cast("bigint").alias("file_id")
         )
         .agg((F.count(F.lit(1)) * 100).alias("bytes"))
-        .withColumn(
-            "band", (F.col("file_id") / _CP_BAND).cast("bigint")
-        )
     )
-    intra_w = (
-        Window.partitionBy("band")
-        .orderBy("file_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    banded = files.withColumn("intra_before", F.sum("bytes").over(intra_w))
-    band_tot = files.groupBy("band").agg(F.sum("bytes").alias("tot"))
-    b1, b2 = band_tot.alias("b1"), band_tot.alias("b2")
-    offs = (
-        b1.join(F.broadcast(b2), F.col("b2.band") < F.col("b1.band"), "left")
-        .groupBy(F.col("b1.band").alias("band"))
-        .agg(F.coalesce(F.sum("b2.tot"), F.lit(0)).alias("base"))
-    )
-    placed = banded.join(F.broadcast(offs), "band").select(
+    # Exclusive prefix sum of bytes in file order: the inclusive running
+    # sum over bands of _CP_BAND files, minus the file's own bytes.
+    cum = global_rank(files, ["file_id"], width=_CP_BAND, running={"cum": "bytes"})
+    placed = cum.select(
         "file_id",
         "bytes",
-        (
-            (F.col("base") + F.coalesce(F.col("intra_before"), F.lit(0)))
-            / _CP_TARGET
-        )
-        .cast("bigint")
-        .alias("bin_id"),
+        ((F.col("cum") - F.col("bytes")) / _CP_TARGET).cast("bigint").alias("bin_id"),
     )
     return placed.groupBy(F.col("bin_id").cast("bigint").alias("bin_id")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_files"),

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from uk_procurement_data_pipeline_spark.catalog import load
 from uk_procurement_data_pipeline_spark.functions.exact import dec, oracle_sum
+from uk_procurement_data_pipeline_spark.functions.topk import global_rank
 from uk_procurement_data_pipeline_spark.queries.base import register
 
 
@@ -218,9 +219,9 @@ def order_percentile_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="W1 A7 J6 F28",
     doc="Spearman rank correlation between order price and the owning "
     "customer's account balance — computed at scale with NO global "
-    "sort: both rank sides use the banded-rank + broadcast-offset "
-    "rewrite (price bands of 1000, balance bands of 100), ties broken "
-    "by o_orderkey so ranks are distinct integers (the deterministic "
+    "sort: both rank sides are topk.global_rank's banded rank + "
+    "broadcast offsets (price bands of 1000, balance bands of 100), "
+    "ties broken by o_orderkey so ranks are distinct integers (the deterministic "
     "tie policy, documented in place of average-rank tie correction), "
     "and Pearson's formula then runs over EXACT integer rank moments "
     "summed as DECIMAL(38,0) — overflow-free at any row count — cast "
@@ -254,8 +255,6 @@ def order_percentile_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def spearman_price_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -266,29 +265,8 @@ def spearman_price_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_acctbal").alias("y"),
     )
 
-    def banded_rank(df, val: str, band, out: str):
-        """Global (val, k) rank via in-band row_number + broadcast offsets
-        of strictly-lower bands — the equidepth_value_bins rewrite."""
-        d = df.withColumn("band", band)
-        rk = F.row_number().over(Window.partitionBy("band").orderBy(val, "k"))
-        sizes = d.groupBy("band").agg(F.count(F.lit(1)).alias("bn"))
-        lo = sizes.select(
-            F.col("band").alias("lband"), F.col("bn").alias("ln")
-        )
-        offsets = (
-            sizes.join(F.broadcast(lo), F.col("lband") < F.col("band"), "left")
-            .groupBy("band")
-            .agg(F.coalesce(F.sum("ln"), F.lit(0)).alias("off"))
-        )
-        return (
-            d.withColumn("rk", rk)
-            .join(F.broadcast(offsets), "band")
-            .withColumn(out, F.col("off") + F.col("rk"))
-            .drop("band", "rk", "off")
-        )
-
-    ranked = banded_rank(pairs, "x", F.floor(F.col("x") / 1000), "rx")
-    ranked = banded_rank(ranked, "y", F.floor(F.col("y") / 100), "ry")
+    ranked = global_rank(pairs, ["x", "k"], width=1000, rank="rx")
+    ranked = global_rank(ranked, ["y", "k"], width=100, rank="ry")
     dec0 = lambda col: col.cast("decimal(38,0)")  # noqa: E731
     m = ranked.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

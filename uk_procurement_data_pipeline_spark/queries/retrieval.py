@@ -37,7 +37,7 @@ from pyspark.sql.window import Window
 
 from uk_procurement_data_pipeline_spark import indexes
 from uk_procurement_data_pipeline_spark.catalog import load, local_table
-from uk_procurement_data_pipeline_spark.functions.topk import top_k_per_group
+from uk_procurement_data_pipeline_spark.functions.topk import global_rank, top_k_per_group
 from uk_procurement_data_pipeline_spark.queries.base import register
 
 _TOP_K = 5
@@ -452,8 +452,8 @@ def bigram_surprisal_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Zipf-law exponent of the corpus word-frequency distribution "
     "(the diagnostic behind tokenizer and vocabulary sizing): words "
     "ranked by (count desc, word) WITHOUT a global sort — rank within "
-    "each count value plus broadcast higher-count offsets (the banded-"
-    "rank rewrite; the band IS the count) — then a log-log OLS of "
+    "each count value plus broadcast higher-count offsets (topk."
+    "global_rank; the band IS the count) — then a log-log OLS of "
     "ln(count) on ln(rank) with both logs milli-quantized, so every "
     "regression moment is an exact bigint (milli keeps the cross "
     "moments under 2^63 out to million-word vocabularies). Slope "
@@ -499,26 +499,10 @@ def zipf_exponent_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    # Banded global rank: the band is the count value itself — rank within
-    # each count (partitioned window), offset by the total size of all
-    # HIGHER counts (broadcast join on the bounded count domain). A window,
-    # not top_k_per_group: every word needs its rank.
-    in_band = F.row_number().over(Window.partitionBy("c").orderBy("word"))
-    sizes = vocab.groupBy("c").agg(F.count(F.lit(1)).alias("bn"))
-    hi = sizes.select(F.col("c").alias("hc"), F.col("bn").alias("hn"))
-    offsets = (
-        sizes.join(F.broadcast(hi), F.col("hc") > F.col("c"), "left")
-        .groupBy("c")
-        .agg(F.coalesce(F.sum("hn"), F.lit(0)).alias("off"))
-    )
-    lg = (
-        vocab.withColumn("rk", in_band)
-        .join(F.broadcast(offsets), "c")
-        .selectExpr(
-            "CAST(floor(ln(CAST(off + rk AS DOUBLE)) * 1000 + 0.5)"
-            " AS BIGINT) AS x",
-            "CAST(floor(ln(CAST(c AS DOUBLE)) * 1000 + 0.5) AS BIGINT) AS y",
-        )
+    # Banded global rank: the band is the count value itself.
+    lg = global_rank(vocab, ["c DESC", "word"], rank="rk").selectExpr(
+        "CAST(floor(ln(CAST(rk AS DOUBLE)) * 1000 + 0.5) AS BIGINT) AS x",
+        "CAST(floor(ln(CAST(c AS DOUBLE)) * 1000 + 0.5) AS BIGINT) AS y",
     )
     m = lg.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -551,7 +535,7 @@ _COV_TOPK = 64
     survey="A7 W1 W3 F28",
     doc=f"Vocabulary coverage curve (what fraction of corpus tokens the "
     f"top-k words cover, k <= {_COV_TOPK} — the tokenizer-sizing "
-    "diagnostic): banded global rank as in zipf_exponent_fit, "
+    "diagnostic): banded global rank by topk.global_rank, "
     "cumulative covered tokens as the broadcast higher-count offset "
     "SUM plus a running sum WITHIN the count band (partitioned "
     "window) — no unpartitioned window anywhere, whatever the "
@@ -585,45 +569,16 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
     tot = vocab.agg(F.sum("c").cast("bigint").alias("total"))
-    # A window, not top_k_per_group: the banded rank of every word feeds
-    # the global rank (as in zipf_exponent_fit).
-    in_band_rank = F.row_number().over(Window.partitionBy("c").orderBy("word"))
-    in_band_cum = F.sum("c").over(
-        Window.partitionBy("c")
-        .orderBy("word")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    sizes = vocab.groupBy("c").agg(
-        F.count(F.lit(1)).alias("bn"), F.sum("c").alias("bsum")
-    )
-    hi = sizes.select(
-        F.col("c").alias("hc"),
-        F.col("bn").alias("hn"),
-        F.col("bsum").alias("hsum"),
-    )
-    offsets = (
-        sizes.join(F.broadcast(hi), F.col("hc") > F.col("c"), "left")
-        .groupBy("c")
-        .agg(
-            F.coalesce(F.sum("hn"), F.lit(0)).alias("off_n"),
-            F.coalesce(F.sum("hsum"), F.lit(0)).alias("off_sum"),
-        )
-    )
     return (
-        vocab.withColumn("rk", in_band_rank)
-        .withColumn("bc", in_band_cum)
-        .join(F.broadcast(offsets), "c")
+        global_rank(vocab, ["c DESC", "word"], rank="rank", running={"cum_tokens": "c"})
         .crossJoin(F.broadcast(tot))
         .select(
-            (F.col("off_n") + F.col("rk")).cast("bigint").alias("rank"),
+            "rank",
             "word",
             F.col("c").alias("n_occurrences"),
-            (F.col("off_sum") + F.col("bc")).cast("bigint").alias(
-                "cum_tokens"
-            ),
+            "cum_tokens",
             (
-                (F.col("off_sum") + F.col("bc")).cast("double")
-                / F.col("total").cast("double")
+                F.col("cum_tokens").cast("double") / F.col("total").cast("double")
             ).alias("coverage"),
         )
         .where(F.col("rank") <= _COV_TOPK)

@@ -24,9 +24,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from uk_procurement_data_pipeline_spark.catalog import load
+from uk_procurement_data_pipeline_spark.functions.topk import global_rank, ntile
 from uk_procurement_data_pipeline_spark.queries.base import register
 
 _K = 64
@@ -103,10 +103,10 @@ def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="W1 A7 F28",
     doc="Equi-depth (quantile) binning of event values with ntile(10) "
     "semantics over the total order (value, event_id), computed WITHOUT "
-    "an unpartitioned WindowExec (the vocab_encode_docs pattern): "
-    "row_number within floor(value) bands — parallel across bands — "
-    "plus broadcast strictly-lower-band offsets gives the global rank, "
-    "and ntile's first-(n%b)-buckets-get-one-extra rule is then pure "
+    "an unpartitioned WindowExec: topk.global_rank in floor(value) "
+    "bands (row_number within each band — parallel across bands — plus "
+    "broadcast strictly-lower-band offsets) gives the global rank, and "
+    "topk.ntile's first-(n%b)-buckets-get-one-extra rule is then pure "
     "arithmetic on (rank, n). The oracle keeps the literal ntile() "
     "window, certifying the distributed rewrite EQUALS the textbook "
     "single-sort semantics. Per-bin count/min/max/exact-sum output; "
@@ -129,38 +129,12 @@ def equidepth_value_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = (
         load(spark, sf_dir, "events")
         .where(F.col("value").isNotNull())
-        .select("event_id", "value", F.floor("value").alias("band"))
+        .select("event_id", "value")
     )
-    # Global rank without a global sort: rank within each value band, then
-    # add the count of all strictly-lower bands (the band domain is the
-    # integer range of `value` — bounded — so the offset table broadcasts).
-    in_band = F.row_number().over(
-        Window.partitionBy("band").orderBy("value", "event_id")
-    )
-    sizes = events.groupBy("band").agg(F.count(F.lit(1)).alias("bn"))
-    lo_b = sizes.select(F.col("band").alias("lband"), F.col("bn").alias("ln"))
-    offsets = (
-        sizes.join(F.broadcast(lo_b), F.col("lband") < F.col("band"), "left")
-        .groupBy("band")
-        .agg(F.coalesce(F.sum("ln"), F.lit(0)).alias("off"))
-    )
-    tot = events.agg(F.count(F.lit(1)).alias("n_total"))
-    ranked = (
-        events.withColumn("rk", in_band)
-        .join(F.broadcast(offsets), "band")
-        .join(F.broadcast(tot))
-        .withColumn("rn", F.col("off") + F.col("rk"))
-    )
-    # ntile(b): s = n div b, r = n mod b; buckets 1..r hold s+1 rows.
-    b = F.lit(_N_BINS)
-    s, r = F.col("n_total") / b, F.col("n_total") % b  # integer div below
-    s = F.floor(s)
-    head = r * (s + 1)  # rows living in the first r (larger) buckets
-    bin_col = F.when(
-        F.col("rn") <= head, F.floor((F.col("rn") - 1) / (s + 1)) + 1
-    ).otherwise(r + F.floor((F.col("rn") - head - 1) / s) + 1)
+    # Global rank without a global sort, in $1 value bands (bounded).
+    ranked = global_rank(events, ["value", "event_id"], width=1, size="n")
     return (
-        ranked.select("value", bin_col.cast("int").alias("bin"))
+        ranked.select("value", ntile(F.col("rn"), F.col("n"), _N_BINS).alias("bin"))
         .groupBy("bin")
         .agg(
             F.count(F.lit(1)).alias("n"),
