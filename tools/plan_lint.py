@@ -180,12 +180,14 @@ WHITELIST: dict[str, dict[str, str]] = {
         "ONE-ROW global average (TPC-H q22 shape)",
     },
     "equidepth_value_bins": {
-        "ALLPAIRS": "lband < band prefix-join over $-band CELLS (value-"
-        "domain-bounded both sides) — the no-global-sort ntile idiom",
+        "ALLPAIRS": "topk.global_rank's _lband < band prefix join over the "
+        "$-band size table (value-domain-bounded both sides) — "
+        "ranks for the ntile without a global sort",
     },
     "spearman_price_acctbal": {
-        "ALLPAIRS": "lband < band prefix-join over value-band CELLS — "
-        "midranks without a global sort",
+        "ALLPAIRS": "topk.global_rank's _lband < band prefix joins over the "
+        "price and balance band size tables — midranks without a global "
+        "sort",
     },
     "kendall_tau_b_cells": {
         "ALLPAIRS": "lexicographic (x,y)-cell self-join spelled as an OR "
@@ -194,28 +196,31 @@ WHITELIST: dict[str, dict[str, str]] = {
         "row cardinality",
     },
     "rfm_customer_segments": {
-        "ALLPAIRS": "lband < band prefix-joins over R/F/M band CELLS "
-        "(bounded domains) for the no-global-sort quantile cuts",
+        "ALLPAIRS": "topk.global_rank's _lband < band prefix joins over the "
+        "R/F/M band size tables (bounded domains) for the no-global-sort "
+        "quantile cuts",
     },
     "compaction_bin_packing": {
-        "ALLPAIRS": "band < band prefix-join over file-size band CELLS "
-        "(bounded) for cumulative bin assignment",
+        "ALLPAIRS": "topk.global_rank's _lband < band prefix join over the "
+        "file-size band size table (bounded) for the running byte sum",
     },
     "pareto_8020_users": {
-        "ALLPAIRS": "hc > c parallel-rank join over DISTINCT event-count "
-        "cells + one 1-row total comparison — both bounded",
+        "ALLPAIRS": "topk.global_rank's _lband > band prefix join over the "
+        "DISTINCT event-count size table + one 1-row total comparison — "
+        "both bounded",
     },
     "zipf_exponent_fit": {
-        "ALLPAIRS": "hc > c parallel-rank join over DISTINCT token-count "
-        "cells (value-domain-bounded)",
+        "ALLPAIRS": "topk.global_rank's _lband > band prefix join over the "
+        "DISTINCT token-count size table (value-domain-bounded)",
     },
     "vocab_coverage_curve": {
-        "ALLPAIRS": "hc > c parallel-rank join over DISTINCT token-count "
-        "cells (value-domain-bounded)",
+        "ALLPAIRS": "topk.global_rank's _lband > band prefix join over the "
+        "DISTINCT token-count size table (value-domain-bounded)",
     },
     "vocab_encode_docs": {
-        "ALLPAIRS": "hfreq > freq parallel-rank join over DISTINCT "
-        "frequency cells — the X44 parallel global rank, never row x row",
+        "ALLPAIRS": "topk.global_rank's _lband > band prefix join over the "
+        "DISTINCT frequency size table — the X44 parallel global rank, "
+        "never row x row",
     },
     "ransac_line_fit": {
         "ALLPAIRS": "x > x pairs over the FIXED 16-point deterministic "

@@ -3,6 +3,7 @@ qmanhbeo/uk-procurement-data-pipeline, re-expressed Spark-first.
 
 Layout:
   session    — SparkSession factory (AQE, UTC, Arrow) and scoped confs
+  pyworker   — the Python-worker daemon get_spark names (no per-task zip re-read)
   catalog    — fixture-table loaders (TESTDATA.md parquet), constant tables
   indexes    — fingerprint-addressed index generations (build once, probe)
   functions/ — shared Catalyst helpers: exact sums, top-k, graph, codecs

@@ -2030,12 +2030,13 @@ def join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="W1 A7 J6 F15",
     doc="Order-to-ship SLA distribution per order priority: exact "
     "p50/p90/p99 of the lineitem ship delay (l_shipdate minus "
-    "o_orderdate, integer days) through the banded global-rank "
-    "construction - rank within (priority, delay-day band) plus "
-    "broadcast lower-band offsets, so no priority ever sorts its "
-    "full partition in one task (the percentiles_per_type_banded "
-    "rewrite applied to a join result). The only row-sized work is "
-    "the orders join (orderkey-keyed) and the band rollup.",
+    "o_orderdate, integer days) read off a delay histogram: rows are "
+    "counted per (priority, delay day), a running sum of those counts "
+    "per priority gives each delay's cumulative rank, and a percentile "
+    "is the smallest delay whose running sum reaches its rank, so no "
+    "row-level rank or sort is ever built. The only row-sized work is "
+    "the orders join (orderkey-keyed) and the histogram's partial "
+    "aggregate.",
     oracle="""
         WITH d AS (
           SELECT o.o_orderpriority AS priority,

@@ -15,12 +15,13 @@ thing a Spark engine must get right) while substituting available columns:
 Scale notes: every dimension join is broadcast; the only large-large
 shuffles key on l_orderkey or l_partkey (natural bucketing keys); the
 correlated subqueries of the canonical SQL are rewritten as aggregate
-joins (one scan feeding both sides), never as per-row re-scans.
+joins (one scan feeding both sides) or, for Q2's MIN, a window over the
+candidate set, never as per-row re-scans.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from uk_procurement_data_pipeline_spark.catalog import load
@@ -46,11 +47,11 @@ def _ps(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q2 analog (minimum-cost supplier): for each ECONOMY part of "
     "one size, the EUROPE supplier(s) with the minimum account balance "
     "among suppliers observed shipping that part. The canonical "
-    "correlated MIN subquery is an aggregate computed once over the "
-    "candidate set and equi-joined back on (part, min) — one shuffle on "
-    "the part key feeds both sides; only the fixed-cardinality nation/"
-    "region dims are force-broadcast (part/supplier are SF-scaled, AQE "
-    "decides).",
+    "correlated MIN subquery is a min(s_acctbal) window partitioned by "
+    "the part key plus an equality filter, so the candidate set is built "
+    "once (an aggregate joined back to it built it twice); only the "
+    "fixed-cardinality nation/region dims are force-broadcast (part/"
+    "supplier are SF-scaled, AQE decides).",
     oracle="""
         WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
         cand AS (
@@ -87,16 +88,12 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .select("p_partkey", "p_name", "s_suppkey", "s_name", "s_acctbal", "n_name")
     )
-    mn = cand.groupBy(F.col("p_partkey").alias("mk")).agg(
-        F.min("s_acctbal").alias("min_bal")
+    # A NULL balance never equals the minimum, as in the oracle's join.
+    return (
+        cand.withColumn("min_bal", F.min("s_acctbal").over(Window.partitionBy("p_partkey")))
+        .where(F.col("s_acctbal") == F.col("min_bal"))
+        .drop("min_bal")
     )
-    # mn scales with the filtered part count — no broadcast hint; the join
-    # keys on the same part key as cand, so the shuffle co-locates.
-    return cand.join(
-        mn,
-        (F.col("p_partkey") == F.col("mk"))
-        & (F.col("s_acctbal") == F.col("min_bal")),
-    ).select("p_partkey", "p_name", "s_suppkey", "s_name", "s_acctbal", "n_name")
 
 
 @register(
